@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TXT
+from .skew import is_undersplit
 
 
 def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -824,18 +825,15 @@ def embedding_cosine_pairs_lsh_adaptive(
             .select("id_a", "id_b")
             .distinct()
         )
-        # On an undersplit corpus (scan partitions < parallelism — the
-        # same condition as tables.rebalance_scan, false on a well-
-        # split 100 TB layout) AQE coalesces the distinct's tiny pair
+        # On an undersplit corpus (the same is_undersplit predicate
+        # as tables.rebalance_scan, false on a well-split 100 TB
+        # layout) AQE coalesces the distinct's tiny pair
         # exchange to 1-2 partitions and the exact-cosine scoring of
         # every surviving pair runs single-threaded downstream of it.
         # One narrow (id,id) round-robin exchange restores full-width
         # scoring: d14 3.95 -> 2.80 s min-of-3 alternated (r17).
         spark = emb.sparkSession
-        if (
-            emb.rdd.getNumPartitions()
-            < spark.sparkContext.defaultParallelism
-        ):
+        if is_undersplit(emb, spark):
             pairs = pairs.repartition(spark.sparkContext.defaultParallelism)
     else:
         # pigeonhole dedup: count a pair only in the FIRST band where

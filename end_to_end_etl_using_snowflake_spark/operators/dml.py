@@ -6,9 +6,12 @@ DataFrame, then atomically replace the table" — which is also the right
 shape at 100 TB (rewrite only affected partitions, never row-by-row).
 
 Write protocol (crash-safe): write to ``<table>.__tmp_<uuid>`` ->
-atomic ``rename``/swap -> delete old. Re-running a failed step is safe
-because every post-state computation here is idempotent for the same
-inputs (MERGE included — see operators.merge).
+rename the live directory to ``<table>.__old_<uuid>`` -> rename the
+temp in -> delete old. A crash between the two renames leaves no table
+directory; opening the table rolls that back (``ParquetTable``).
+Re-running a failed step is safe because every post-state computation
+here is idempotent for the same inputs (MERGE included — see
+operators.merge).
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Mapping, Sequence
+from collections.abc import Iterator, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,20 +56,22 @@ def delete_where(df: DataFrame, predicate: Column) -> DataFrame:
 
 
 def empty_frame(spark: SparkSession, schema) -> DataFrame:
-    """Zero-row relation with an exact schema, WITHOUT a Python scan.
+    """Zero-row relation with an exact schema (nullability included):
+    an empty ``LocalRelation``, which scans as zero tasks and which the
+    optimizer can SEE is empty.
 
     ``createDataFrame([], schema)`` parallelizes an empty PYTHON list
     into ``defaultParallelism`` partitions, and every downstream scan
-    of that relation launches one Python worker PER PARTITION that
-    produces zero rows — measured 3.2 s for three 32-partition scans
-    (the executor slots sit blocked on worker startup, ~5 ms of real
-    CPU). The incremental MERGE hits this on every brand-new partition
-    (the pruned target read is provably empty) and consumed it three
-    times per cycle. An empty JVM RDD keeps the exact schema —
-    including nullability — and scans as a ZERO-partition relation:
-    no tasks, no Python (r17). Accepts a StructType or DDL string.
+    launches one Python worker per partition that produces zero rows
+    (measured 3.2 s for three 32-partition scans, r17). An empty JVM
+    RDD scans as zero tasks too, but as a ``LogicalRDD`` it is opaque
+    to Catalyst. The empty ``LocalRelation`` is pruned by the first
+    optimizer batch (``PropagateEmptyRelation``) together with every
+    join and union branch it feeds: a MERGE into a missing table plans
+    as exactly a projection of the source, with no caller-side "target
+    is empty" flag. Accepts a StructType or DDL string.
     """
-    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    return local_frame(spark, [], schema)
 
 
 def local_frame(spark: SparkSession, rows: Sequence, schema) -> DataFrame:
@@ -81,7 +86,9 @@ def local_frame(spark: SparkSession, rows: Sequence, schema) -> DataFrame:
     that lands as a JVM LocalRelation regardless of the session's
     Arrow conf — exactly what Catalyst produces for a SQL VALUES list.
 
-    ``rows`` are tuples; ``schema`` is a DDL string or StructType.
+    ``rows`` are tuples with one value per schema column (a row of
+    any other length raises, as ``createDataFrame`` does);
+    ``schema`` is a DDL string or StructType.
     Verified type coverage: strings / longs / ints / doubles / bools
     (the literal-metadata shapes this engine builds driver-side);
     callers with dates, decimals or nested types should keep
@@ -93,10 +100,54 @@ def local_frame(spark: SparkSession, rows: Sequence, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     names = [f.name for f in schema.fields]
+    for r in rows:
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_frame row has {len(r)} values for {len(names)} "
+                f"columns: {r!r}"
+            )
     tbl = pa.Table.from_pylist(
         [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(tbl, schema=schema)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: names starting with ``.`` and names
+    starting with ``_`` are not data, except ``key=value`` partition
+    directories such as a changelog's ``_version=3``."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def data_files(root: str) -> Iterator[str]:
+    """Paths of the parquet data files under ``root`` — exactly the
+    files a Spark scan of ``root`` reads, so footer counts and hard
+    links agree with ``spark.read.parquet(root)``."""
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for f in files:
+            if f.endswith(".parquet") and not _hidden(f):
+                yield os.path.join(dirpath, f)
+
+
+def hardlink_tree(src: str, dst: str) -> None:
+    """Copy a directory tree as hard links — O(files) metadata, zero
+    bytes copied. Safe for this engine's write-once files."""
+    for root, _dirs, files in os.walk(src):
+        rel = os.path.relpath(root, src)
+        dst_dir = dst if rel == "." else os.path.join(dst, rel)
+        os.makedirs(dst_dir, exist_ok=True)
+        for f in files:
+            os.link(os.path.join(root, f), os.path.join(dst_dir, f))
+
+
+def _swap(path: str, tmp: str, old: str) -> None:
+    """Publish the complete directory ``tmp`` at ``path``: rename the
+    live directory to ``old``, rename ``tmp`` in, delete ``old``."""
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def truncate(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -120,6 +171,33 @@ class ParquetTable:
         self.spark = spark
         self.path = path
         self.partition_by = list(partition_by)
+        self._recover_swap()
+
+    def _recover_swap(self) -> None:
+        """Roll back a swap interrupted between its two renames: the
+        table directory is missing but an ``__old_`` sibling holds the
+        last committed state. The newest such sibling is renamed back
+        and the swap's stray temp (and any older half-deleted
+        ``__old_`` sibling) is removed, so ``exists()`` never reports a
+        committed table as missing after a crash."""
+        parent, name = os.path.split(self.path)
+        if os.path.exists(self.path) or not os.path.isdir(parent):
+            return
+        siblings = os.listdir(parent)
+
+        def named(tag: str) -> list[str]:
+            return [
+                os.path.join(parent, s)
+                for s in siblings
+                if s.startswith(f"{name}.{tag}")
+            ]
+
+        olds = sorted(named("__old_"), key=lambda p: os.stat(p).st_ctime)
+        if not olds:
+            return
+        os.rename(olds.pop(), self.path)
+        for p in olds + named("__tmp_"):
+            shutil.rmtree(p, ignore_errors=True)
 
     def exists(self) -> bool:
         return os.path.exists(self.path)
@@ -179,14 +257,11 @@ class ParquetTable:
         return tmp
 
     def swap_tmp(self, tmp: str) -> None:
-        """The commit half of ``overwrite``: atomic rename of a temp
-        directory produced by ``write_tmp`` into the table path."""
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old, ignore_errors=True)
+        """The commit half of ``overwrite`` and ``truncate``: move the
+        live directory aside, rename the temp directory in, delete the
+        old one. A crash between the two renames is rolled back the
+        next time the table is opened (``_recover_swap``)."""
+        _swap(self.path, tmp, f"{self.path}.__old_{uuid.uuid4().hex[:8]}")
 
     def overwrite_partitions(self, df: DataFrame) -> None:
         """Dynamic partition overwrite: replace only the partitions
@@ -210,12 +285,7 @@ class ParquetTable:
         job here cost ~0.5 s per pipeline cycle for no work."""
         tmp = f"{self.path}.__tmp_{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp)
-        old = f"{self.path}.__old_{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.exists(old):
-            shutil.rmtree(old, ignore_errors=True)
+        self.swap_tmp(tmp)
 
     def clone_to(self, path: str) -> "ParquetTable":
         """Zero-copy ``CREATE TABLE ... CLONE`` (the Snowflake
@@ -233,12 +303,7 @@ class ParquetTable:
             raise ValueError(f"clone target already exists: {path}")
         if not self.exists():
             raise ValueError(f"cannot clone a non-existent table: {self.path}")
-        for root, _dirs, files in os.walk(self.path):
-            rel = os.path.relpath(root, self.path)
-            dst_dir = path if rel == "." else os.path.join(path, rel)
-            os.makedirs(dst_dir, exist_ok=True)
-            for f in files:
-                os.link(os.path.join(root, f), os.path.join(dst_dir, f))
+        hardlink_tree(self.path, path)
         return ParquetTable(self.spark, path, partition_by=self.partition_by)
 
     def drop(self) -> None:
@@ -270,10 +335,7 @@ class ParquetTable:
         os.rename(dropped, self.path)
 
     def file_count(self) -> int:
-        n = 0
-        for _, _, files in os.walk(self.path):
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
+        return sum(1 for _ in data_files(self.path))
 
     def column_max(self, col: str):
         """Exact column maximum from the parquet FOOTER statistics —
@@ -288,23 +350,20 @@ class ParquetTable:
         if not self.exists():
             return None
         best = None
-        for root, _dirs, files in os.walk(self.path):
-            for f in files:
-                if not f.endswith(".parquet"):
+        for path in data_files(self.path):
+            md = pq.ParquetFile(path).metadata
+            try:
+                idx = md.schema.names.index(col)
+            except ValueError:
+                return None
+            for rg in range(md.num_row_groups):
+                c = md.row_group(rg).column(idx)
+                st = c.statistics
+                if c.num_values == 0:
                     continue
-                md = pq.ParquetFile(os.path.join(root, f)).metadata
-                try:
-                    idx = md.schema.names.index(col)
-                except ValueError:
+                if st is None or not st.has_min_max:
                     return None
-                for rg in range(md.num_row_groups):
-                    c = md.row_group(rg).column(idx)
-                    st = c.statistics
-                    if c.num_values == 0:
-                        continue
-                    if st is None or not st.has_min_max:
-                        return None
-                    best = st.max if best is None else max(best, st.max)
+                best = st.max if best is None else max(best, st.max)
         return best
 
     def compact(self, max_files: int = 1) -> bool:
@@ -476,12 +535,7 @@ class MultiTableTransaction:
                 raise RuntimeError(f"injected crash after {done} renames")
             if not os.path.exists(tmp):
                 continue  # this rename already happened (recovery rerun)
-            old = f"{live}.__old_{self.txn_id}"
-            if os.path.exists(live):
-                os.rename(live, old)
-            os.rename(tmp, live)
-            if os.path.exists(old):
-                shutil.rmtree(old, ignore_errors=True)
+            _swap(live, tmp, f"{live}.__old_{self.txn_id}")
             done += 1
         os.remove(self._marker)
 

@@ -70,16 +70,13 @@ def merge_dataframes(
     update_cols: Sequence[str] | None = None,
     matched_set: Mapping[str, Column] | None = None,
     insert_defaults: Mapping[str, Column] | None = None,
-    target_known_empty: bool = False,
 ) -> DataFrame:
     """Pure-DataFrame MERGE (SCD-1): returns the post-merge state.
 
-    ``target_known_empty=True`` is the initial-load fast path: when the
-    caller KNOWS the target has no rows (e.g. its storage directory
-    does not exist yet — a free filesystem check, where a count would
-    be a Spark action), every source row is an insert and both joins
-    are skipped — the bulk-backfill case where the anti-join would
-    shuffle the entire batch to discover nothing matches.
+    An initial load needs no special path: a missing table reads as an
+    empty ``LocalRelation`` (``dml.empty_frame``), and Catalyst's
+    ``PropagateEmptyRelation`` reduces both joins and the union to one
+    projection of the source — every row an insert, nothing shuffled.
 
     - matched rows  -> source values for ``update_cols`` (default: all
       non-key target columns also present in the source), with
@@ -107,24 +104,10 @@ def merge_dataframes(
     if clash:
         raise ValueError(f"carry columns also present in source: {clash}")
 
-    if target_known_empty:
-        out_new: list[Column] = []
-        for c in target_cols:
-            if c in keys or c in update_cols:
-                out_new.append(F.col(c).alias(c))
-            else:
-                out_new.append(
-                    insert_defaults.get(
-                        c, F.lit(None).cast(target.schema[c].dataType)
-                    ).alias(c)
-                )
-        return source.select(*out_new)
-
     kept = target.join(source.select(*keys).distinct(), on=keys, how="left_anti")
 
-    s, t = source.alias("s"), (
-        target.select(*keys, *carry_cols).withColumn("__matched", F.lit(True)).alias("t")
-    )
+    s = source.alias("s")
+    t = target.select(*keys, *carry_cols, F.lit(True).alias("__matched")).alias("t")
     cond = [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys]
     joined = s.join(t, on=cond, how="left")
     is_matched = F.col("t.__matched").isNotNull()
@@ -166,7 +149,6 @@ def fill_identity(
     key_col: str,
     order_by: Sequence[str],
     existing_max: int | None = None,
-    all_new: bool = False,
 ) -> DataFrame:
     """Snowflake ``number autoincrement`` analog (customer-...sql:32).
 
@@ -180,16 +162,15 @@ def fill_identity(
     100M-row initial load ranks in parallel; the offset table is one row
     per bucket. Key *values* are engine-specific — tests assert
     uniqueness/contiguity/determinism only (FIXTURES.md).
+
+    ``existing_max`` seeds the new keys; ``None`` folds ``max(key_col)``
+    of ``df`` into the plan. When ``key_col`` is a literal NULL above
+    any cache (a fact rebuild's added key, an initial load's merge into
+    an empty ``LocalRelation``), Catalyst folds the ``isNull`` filter to
+    true and the ``isNotNull`` branch to empty, so the plan is the rank
+    alone — no split and no union.
     """
-    # ``all_new=True`` is the caller-knows-every-key-is-NULL fast path
-    # (a fact rebuild adds the key column as lit(NULL); an initial dim
-    # load has no pre-existing rows): the isNull split and the final
-    # union with the isNotNull branch are provably empty work, but the
-    # planner cannot see that — skipping them removes two scans of the
-    # (usually cached) input and a union from every rebuild plan (r17).
-    # Key VALUES are identical: the same rows flow through the same
-    # bucket/offset/rank arithmetic.
-    news = df if all_new else df.filter(F.col(key_col).isNull())
+    news = df.filter(F.col(key_col).isNull())
     spark = news.sparkSession
 
     # Distributed rank: a global Window.orderBy would pull every insert
@@ -234,16 +215,10 @@ def fill_identity(
     else:
         base = F.lit(int(existing_max)).cast("long")
     w = Window.partitionBy("__bkt").orderBy(*sort_cols)
-    news = (
-        ranked.withColumn(
-            key_col,
-            (base + F.col("__off") + F.row_number().over(w)).cast("long"),
-        )
-        .drop("__bkt", "__off", "__seed")
-        .select(*df.columns)
+    key = (base + F.col("__off") + F.row_number().over(w)).cast("long")
+    news = ranked.select(
+        *[key.alias(c) if c == key_col else F.col(c) for c in df.columns]
     )
-    if all_new:
-        return news
     return df.filter(F.col(key_col).isNotNull()).unionByName(news)
 
 

@@ -25,10 +25,18 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"
+
+
+def is_undersplit(df: DataFrame, spark: SparkSession) -> bool:
+    """True when ``df`` runs on fewer partitions than the cluster has
+    cores: the layout (few files or row groups) caps the parallelism
+    of everything computed from it. False on a well-split layout, where
+    a round-robin exchange would be pure cost."""
+    return df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
 
 
 def salted_join(

@@ -21,22 +21,10 @@ date-ranged fact queries rely on it.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _list_data_files(table_path: str) -> list[str]:
-    """Filesystem listing of the table's data files — O(files) metadata,
-    the same operation class as ``list @stage`` / CopyManifest. Never a
-    Spark job: at 100 TB enumerating files must not plan a scan."""
-    out = []
-    for root, _, files in os.walk(table_path):
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                out.append(os.path.join(root, f))
-    return sorted(out)
+from .dml import data_files, empty_frame
 
 
 def _strip_scheme(path: str) -> str:
@@ -93,8 +81,6 @@ def pruned_read(
     overapproximate). Returns (frame, n_scanned, n_total)."""
     files, total = pruned_files(manifest, col, lo, hi)
     if not files:
-        from .dml import empty_frame
-
         return empty_frame(spark, schema), 0, total
     return spark.read.schema(schema).parquet(*files), len(files), total
 
@@ -128,7 +114,7 @@ def update_zone_map(
         _strip_scheme(r["file"]) for r in manifest.select("file").collect()
     }  # O(files) metadata; also snapshots the manifest NOW (ADVICE r5)
     paths = [
-        p for p in _list_data_files(table_path) if _strip_scheme(p) not in known
+        p for p in sorted(data_files(table_path)) if _strip_scheme(p) not in known
     ]
     if not paths:
         return manifest

@@ -16,9 +16,10 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.dml import ParquetTable, empty_frame
+from ..operators.dml import ParquetTable, data_files, empty_frame
 from ..streaming.changelog import Changelog
 
 SCHEMAS = ("stg", "raw", "transformed")
@@ -44,8 +45,9 @@ class ManagedTable:
 
     def read(self) -> DataFrame:
         if not self.storage.exists():
-            # JVM-empty (0 partitions): the Python-list variant scanned
-            # as 32 empty Python-worker tasks per consumer (dml.py r17)
+            # an empty LocalRelation: zero tasks, and every join or
+            # union branch fed by it is pruned by the optimizer — the
+            # initial-load MERGE plans as a projection (dml.empty_frame)
             return empty_frame(self.spark, self.schema)
         # explicit schema: skips footer inference, keeps the declared
         # column order for partitioned layouts, and makes an empty
@@ -59,6 +61,18 @@ class ManagedTable:
             .parquet(self.storage.path)
             .select(*[f.name for f in self.schema.fields])
         )
+
+    def identity_max(self, col: str) -> int:
+        """Seed for an identity column: its stored maximum, 0 for a
+        missing or empty table. Read from the parquet footers
+        (``ParquetTable.column_max`` — driver metadata, no Spark job);
+        when a row group lacks statistics it falls back to one scan."""
+        if not self.storage.exists():
+            return 0
+        m = self.storage.column_max(col)
+        if m is None:
+            m = self.read().agg(F.max(col)).first()[0]
+        return int(m) if m is not None else 0
 
     def read_partitions(self, values: Sequence[str]) -> DataFrame:
         """Path-pruned read: ONLY the listed partition-directory values
@@ -81,10 +95,8 @@ class ManagedTable:
             if os.path.exists(os.path.join(self.storage.path, f"{pcol}={v}"))
         ]
         if not dirs:
-            # brand-new partitions: the incremental MERGE consumes this
-            # empty target three times per cycle — JVM-empty scans as
-            # zero tasks where the Python-list form cost ~1.2 s of
-            # blocked executor slots per 32-partition scan (dml.py r17)
+            # brand-new partitions: the same empty LocalRelation as a
+            # missing table, so the MERGE against them loses its joins
             return empty_frame(self.spark, self.schema)
         return self.spark.read.schema(self.schema).parquet(*dirs)
 
@@ -108,15 +120,12 @@ class ManagedTable:
             self.changelog.log_path, f"_version={version}", f"_action={action}"
         )
         os.makedirs(self.storage.path, exist_ok=True)
-        for root, _dirs, files in os.walk(src):
-            for f in files:
-                if f.endswith(".parquet"):
-                    target = os.path.join(self.storage.path, f)
-                    if os.path.exists(target):  # part names are unique
-                        target = os.path.join(
-                            self.storage.path, f"v{version}-{f}"
-                        )
-                    os.link(os.path.join(root, f), target)
+        for path in data_files(src):
+            f = os.path.basename(path)
+            target = os.path.join(self.storage.path, f)
+            if os.path.exists(target):  # part names are unique
+                target = os.path.join(self.storage.path, f"v{version}-{f}")
+            os.link(path, target)
         return version
 
     def overwrite(self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT") -> int:

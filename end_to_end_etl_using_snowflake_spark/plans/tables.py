@@ -13,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dml import data_files
+from ..operators.skew import is_undersplit
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -68,14 +71,8 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        n = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return n
-    return pq.ParquetFile(path).metadata.num_rows
+    files = data_files(path) if os.path.isdir(path) else [path]
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -96,7 +93,7 @@ def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     pipelines; for cheap scans the exchange costs more than it buys
     (measured: +4 s total when applied to every load).
     """
-    if df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+    if is_undersplit(df, spark):
         return df.repartition(spark.sparkContext.defaultParallelism)
     return df
 

@@ -33,6 +33,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dml import data_files
+
 ACTION_COL = "_action"
 VERSION_COL = "_version"
 
@@ -43,12 +45,7 @@ def _count_parquet_rows(root: str) -> int:
     job. Powers the stream_has_data metadata fast path (r16)."""
     import pyarrow.parquet as pq
 
-    n = 0
-    for r, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(r, f)).metadata.num_rows
-    return n
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in data_files(root))
 
 
 class Changelog:
@@ -136,15 +133,12 @@ class Changelog:
             f"{ACTION_COL}={action}",
         )
         os.makedirs(dst, exist_ok=True)
-        rows = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                target = os.path.join(dst, f)
-                if os.path.exists(target):  # paranoid: part names are unique
-                    target = os.path.join(dst, f"v{new_version}-{f}")
-                os.link(os.path.join(root, f), target)
+        for path in data_files(src_dir):
+            f = os.path.basename(path)
+            target = os.path.join(dst, f)
+            if os.path.exists(target):  # paranoid: part names are unique
+                target = os.path.join(dst, f"v{new_version}-{f}")
+            os.link(path, target)
         rows = _count_parquet_rows(dst)
         meta["version"] = new_version
         meta.setdefault("rows", {})[str(new_version)] = rows

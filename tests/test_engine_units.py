@@ -3,6 +3,8 @@ changelog offsets, pipe streaming mode, DML helpers, multimodal stub."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -78,30 +80,68 @@ def test_fill_identity_contiguous(spark):
     assert again == got
 
 
-def test_fill_identity_all_new_matches_default(spark):
-    """r17: the all_new fast path (caller knows every key is NULL —
-    fact rebuilds, initial dim loads) must assign EXACTLY the values
-    the generic path assigns: same bucket/offset/rank arithmetic, only
-    the provably-empty isNull split and union are skipped."""
-    from pyspark.sql import functions as F
+def test_fill_identity_literal_null_key_plans_no_union(spark):
+    """A key column that is a literal NULL above a cache (a fact
+    rebuild's added key) lets the optimizer fold fill_identity's isNull
+    split away: the plan has no Union. The seeded values are
+    ``existing_max`` plus the same rank the unseeded fill assigns."""
+    base = spark.range(0, 500).select(
+        F.concat(F.lit("k"), (F.col("id") * 37) % 1000).alias("name")
+    ).persist()
+    try:
+        df = base.withColumn("id", F.lit(None).cast("long"))
+        seeded = M.fill_identity(df, "id", order_by=["name"], existing_max=100)
+        plan = seeded._jdf.queryExecution().optimizedPlan().toString()
+        assert "Union" not in plan
+        ranks = {r.name: r.id for r in M.fill_identity(df, "id", order_by=["name"]).collect()}
+        got = {r.name: r.id for r in seeded.collect()}
+        assert got == {k: v + 100 for k, v in ranks.items()}
+        assert sorted(got.values()) == list(range(101, 101 + len(got)))
+    finally:
+        base.unpersist()
 
-    df = spark.range(0, 500).select(
-        F.lit(None).cast("long").alias("id"),
-        F.concat(F.lit("k"), (F.col("id") * 37) % 1000).alias("name"),
+
+def test_local_frame_rejects_row_arity_mismatch(spark):
+    """A row with fewer or more values than the schema has columns must
+    fail loudly, not be null-filled or truncated."""
+    schema = "a long, b string"
+    assert dml.local_frame(spark, [(1, "x")], schema).collect()[0] == (1, "x")
+    with pytest.raises(ValueError, match="1 values for 2 columns"):
+        dml.local_frame(spark, [(1, "x"), (2,)], schema)
+    with pytest.raises(ValueError, match="3 values for 2 columns"):
+        dml.local_frame(spark, [(1, "x", "extra")], schema)
+
+
+def test_footer_walker_skips_hidden_and_underscore_files(spark, tmp_path):
+    """Footer counts, file counts, footer maxima and hard links read the
+    files a Spark scan reads: ``_x.parquet`` and ``.x.parquet`` are not
+    data (Spark's file index skips them), ``_version=N`` directories
+    are."""
+    import shutil
+
+    from end_to_end_etl_using_snowflake_spark.plans.tables import parquet_row_count
+    from end_to_end_etl_using_snowflake_spark.streaming.changelog import (
+        _count_parquet_rows,
     )
-    generic = {r.name: r.id for r in M.fill_identity(df, "id", order_by=["name"]).collect()}
-    fast = {
-        r.name: r.id
-        for r in M.fill_identity(df, "id", order_by=["name"], all_new=True).collect()
-    }
-    assert fast == generic
-    seeded = {
-        r.name: r.id
-        for r in M.fill_identity(
-            df, "id", order_by=["name"], existing_max=100, all_new=True
-        ).collect()
-    }
-    assert seeded == {k: v + 100 for k, v in generic.items()}
+
+    path = tmp_path / "t.parquet"
+    spark.range(5).coalesce(1).write.parquet(str(path))
+    t = dml.ParquetTable(spark, str(path))
+    before = (parquet_row_count(str(tmp_path), "t"), t.file_count(), t.column_max("id"))
+    assert before == (5, 1, 4)
+    spark.range(100, 107).coalesce(1).write.parquet(str(tmp_path / "big"))
+    (big,) = [f for f in os.listdir(tmp_path / "big") if f.endswith(".parquet")]
+    for name in ("_x.parquet", ".x.parquet"):
+        shutil.copy(tmp_path / "big" / big, path / name)
+    assert spark.read.parquet(str(path)).count() == 5
+    assert (parquet_row_count(str(tmp_path), "t"), t.file_count(), t.column_max("id")) == before
+    assert _count_parquet_rows(str(path)) == 5
+
+    log = Changelog(spark, str(tmp_path / "linked"))
+    v = log.record_linked(str(path), "INSERT")
+    assert log._read_meta()["rows"][str(v)] == 5
+    assert _count_parquet_rows(log.log_path) == 5
+    assert log.stream_read("c")[0].count() == 5
 
 
 def test_update_delete_where(spark):
@@ -1293,6 +1333,70 @@ def test_dynamic_table_crash_retry_no_double_count(spark, tmp_path):
     assert state() == {1: (3, 115), 2: (2, 8), 3: (1, 50)}
     assert log.offset(dt.consumer) == 4
     assert dt.applied_version() == 4
+
+
+def test_interrupted_swap_rolls_back_on_reopen(spark, tmp_path, monkeypatch):
+    """A crash between the two renames of a table swap leaves no table
+    directory, only its ``__old_`` sibling. Reopening the warehouse must
+    roll the swap back; otherwise the re-run raw task finds no table,
+    takes the initial-load path and replaces raw's history with one
+    batch."""
+    from datetime import datetime, timezone
+
+    from end_to_end_etl_using_snowflake_spark.pipelines.entities import (
+        EntityPipelines,
+    )
+    from end_to_end_etl_using_snowflake_spark.plans.catalog import Warehouse
+
+    landing = tmp_path / "landing"
+    for e in ("customer", "item", "order"):
+        (landing / e).mkdir(parents=True)
+
+    def land(name, ids):
+        header = "customer_id,salutation,first_name,last_name,birth_day," \
+            "birth_month,birth_year,birth_country,email_address,is_active"
+        rows = [f"C{i},Mr.,F{i},{name},1,2,1990,X,c{i}@x.com,Y" for i in ids]
+        (landing / "customer" / f"{name}.csv").write_text(
+            "\n".join([header, *rows]) + "\n"
+        )
+
+    def reopen():
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        clock = lambda: datetime(2022, 3, 1, tzinfo=timezone.utc)  # noqa: E731
+        return EntityPipelines(spark, wh, str(landing), clock=clock)
+
+    p = reopen()
+    land("history", range(20))
+    p.run_all()
+    raw_path = p.raw["customer"].storage.path
+    history = {r.customer_id for r in p.raw["customer"].read().collect()}
+    assert len(history) == 20
+
+    rename = os.rename
+
+    def crash_between_renames(src, dst):
+        if dst == raw_path and "__tmp_" in str(src):
+            raise RuntimeError("injected crash between the swap's renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_between_renames)
+    land("delta", range(15, 25))
+    runs = p.run_all()
+    monkeypatch.undo()
+    assert "FAILED" in [r.state for r in runs["customer"]]
+    assert not os.path.exists(raw_path)
+
+    p = reopen()
+    runs = p.run_all()
+    assert all(r.state == "SUCCEEDED" for r in runs["customer"])
+    raw = {r.customer_id: r.last_name for r in p.raw["customer"].read().collect()}
+    assert set(raw) == {f"C{i}" for i in range(25)}  # full history kept
+    assert [raw[f"C{i}"] for i in (0, 15, 24)] == ["history", "delta", "delta"]
+    assert p.dim_customer.read().count() == 25
+    assert not [
+        d for d in os.listdir(os.path.dirname(raw_path))
+        if "__old_" in d or "__tmp_" in d
+    ]
 
 
 def test_snowflake_sql_dispatch_edges(spark, tmp_path):
@@ -6609,6 +6713,9 @@ def test_empty_frame_scans_without_python_tasks(spark):
     ef = empty_frame(spark, schema)
     assert ef.schema == schema  # exact, including nullability
     assert ef.rdd.getNumPartitions() == 0
+    # an empty LocalRelation, which the optimizer can prune through
+    plan = ef._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation <empty>"), plan
     assert ef.count() == 0
     assert truncate(spark, ef).rdd.getNumPartitions() == 0
     # DDL-string schemas too (plan-level literal frames)

@@ -149,14 +149,20 @@ def test_range_join_equals_naive(spark, points, intervals):
     assert got == want
 
 
-def test_target_known_empty_fast_path_equivalence(spark):
-    """merge_dataframes(target_known_empty=True) must produce exactly
-    the rows the two-join path produces against an actually-empty
-    target — the initial-load shortcut can never change semantics."""
-    from pyspark.sql import functions as F
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_merge_into_missing_table_plans_no_join(spark, tmp_path):
+    """An initial load needs no caller flag: a missing ManagedTable
+    reads as an empty LocalRelation, so the optimizer prunes both MERGE
+    joins and the union to a projection of the source. Its rows must
+    equal the same MERGE against an empty target the optimizer cannot
+    see through (a LogicalRDD, which keeps both joins)."""
     from pyspark.sql import types as T
 
     from end_to_end_etl_using_snowflake_spark.operators.merge import merge_dataframes
+    from end_to_end_etl_using_snowflake_spark.plans.catalog import ManagedTable
 
     schema = T.StructType(
         [
@@ -166,24 +172,20 @@ def test_target_known_empty_fast_path_equivalence(spark):
             T.StructField("ts", T.TimestampType()),
         ]
     )
-    target = spark.createDataFrame([], schema)
+    missing = ManagedTable(spark, str(tmp_path / "never_written"), schema)
+    opaque = spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
     source = spark.range(5).select(
         F.col("id").alias("k"), F.concat(F.lit("v"), F.col("id")).alias("v")
     )
     now = F.lit("2021-06-01 00:00:00").cast("timestamp")
-    kwargs = dict(
-        keys=["k"],
-        matched_set={"ts": now},
-        insert_defaults={"ts": now},
-    )
-    slow = merge_dataframes(target, source, **kwargs)
-    fast = merge_dataframes(target, source, target_known_empty=True, **kwargs)
-    # nullability may tighten on the join-free path (source non-null
-    # columns stay non-null); names and types must be identical
-    assert [(f.name, f.dataType) for f in slow.schema] == [
-        (f.name, f.dataType) for f in fast.schema
-    ]
-    assert sorted(map(tuple, slow.collect())) == sorted(map(tuple, fast.collect()))
+    kwargs = dict(keys=["k"], matched_set={"ts": now}, insert_defaults={"ts": now})
+    pruned = merge_dataframes(missing.read(), source, **kwargs)
+    joined = merge_dataframes(opaque, source, **kwargs)
+    assert "Join" not in _optimized(pruned)
+    assert "Union" not in _optimized(pruned)
+    assert "Join" in _optimized(joined)  # the control really joins
+    assert pruned.schema == joined.schema
+    assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, joined.collect()))
 
 
 # ---------------------------------------------------------------------------

@@ -44,15 +44,18 @@ def get_spark(cpus: int):
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.timeType.enabled", "true")
         .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4099")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def rest(path: str):
-    with urllib.request.urlopen(f"http://localhost:4099/api/v1/{path}") as r:
+def rest(spark, path: str):
+    """GET one UI REST endpoint. The base comes from the running UI's
+    own URL: Spark moves to the next free port when the default is
+    taken, so a fixed port could read another application's jobs."""
+    url = f"{spark.sparkContext.uiWebUrl}/api/v1/{path}"
+    with urllib.request.urlopen(url) as r:
         return json.loads(r.read())
 
 
@@ -92,12 +95,12 @@ def main() -> None:
     for name in args.queries:
         times = []
         for i in range(args.repeats):
-            jobs_before = {j["jobId"] for j in rest(f"applications/{app_id}/jobs")}
+            jobs_before = {j["jobId"] for j in rest(spark, f"applications/{app_id}/jobs")}
             times.append(run(name))
             if i == args.repeats - 1 and args.jobs:
                 jobs = [
                     j
-                    for j in rest(f"applications/{app_id}/jobs")
+                    for j in rest(spark, f"applications/{app_id}/jobs")
                     if j["jobId"] not in jobs_before
                 ]
                 jobs.sort(key=lambda j: j["jobId"])
