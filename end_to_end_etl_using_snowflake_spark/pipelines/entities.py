@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from functools import partialmethod
 
@@ -149,12 +150,18 @@ class EntityPipelines:
         pipe = self.pipes[entity]
         stage = self.stage[entity]
         transform_name = "fact_order_tsk" if entity == "order" else f"dim_{entity}_tsk"
+        raw_log = self.raw[entity].changelog
+        transform_consumer = "fact_tsk" if entity == "order" else "dim_tsk"
 
         dag.add(
             Task(
                 f"pause_pipe_{entity}",
                 body=pipe.pause,
-                when=lambda: stage.changelog.stream_has_data("raw_tsk"),
+                # also wakes a chain that stopped after its raw task: the
+                # stage offset is committed, so only the transform's
+                # unread input and the pipe it left paused remain
+                when=lambda: stage.changelog.stream_has_data("raw_tsk")
+                or (pipe.paused and raw_log.stream_has_data(transform_consumer)),
             )
         )
         dag.add(
@@ -423,49 +430,38 @@ class EntityPipelines:
     # ------------------------------------------------------------------
     def run_cycle(self, entity: str) -> list:
         """One scheduled wake-up for one entity: poll the pipe, then walk
-        the 5-task chain. Order cycles must run after customer/item
-        (cross-entity dependency, order-...sql:204-207)."""
+        the 5-task chain. An order cycle run this way does not wait for
+        the dims (order-...sql:204-207); ``run_all`` does."""
         self.pipes[entity].refresh()
         return self.dags[entity].run_cycle()
 
     def run_all(self) -> dict[str, list]:
-        """One wake-up for all three entities.
+        """One wake-up for all three entities; the three chains run at
+        the same time.
 
-        customer and item are fully independent (disjoint pipes,
-        manifests, stage/raw tables, dims, changelog metas, task DAGs),
-        so their cycles run CONCURRENTLY from a 2+1-thread pool — each
-        entity's chain of small jobs back-fills executor slots the
-        other's stragglers leave idle (Spark schedules concurrent jobs
-        FIFO; job submission is thread-safe). The order pipe refresh
-        (landing-CSV ingest, touches only stg_order) overlaps too; the
-        order TASK CHAIN still runs strictly after both dim cycles —
-        its fact task joins dim_customer x dim_item (the cross-entity
-        dependency, order-...sql:204-207). Results are unchanged: the
-        overlapped work shares no tables, and each DAG's own
-        pause->merge->truncate->resume ordering is preserved inside
-        its thread (r16; steady-state full cycle 13.9 -> 9.5 s at
-        sf0.1, same warehouse state and audit).
+        The entities share no tables, pipes or changelogs. The one
+        cross-entity dependency is the fact task's join of both dims
+        (order-...sql:204-207), so ``fact_order_tsk`` starts only after
+        both dim cycles of this wake-up have ended; the order pipe
+        refresh and ``order_raw_tsk`` overlap them. Customer and item
+        run on two worker threads, order on the calling thread.
 
-        Failure semantics (changed from the sequential form, ADVICE
-        r16): if the customer cycle raises, its exception propagates
-        from ``fc.result()`` only after the pool's shutdown lets the
-        item/order-refresh futures finish — item side effects land
-        even when customer fails (previously the sequential loop
-        short-circuited), and an order-refresh exception surfaces
-        only after both dim results are consumed. Each cycle is
-        individually idempotent (T1), so a partial wake-up re-runs
-        safely. An injected ``clock`` callable is now invoked from
-        multiple threads — the default ``_utc_now`` is thread-safe;
-        a stateful test Clock must be too."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fc = pool.submit(self.run_cycle, "customer")
-            fi = pool.submit(self.run_cycle, "item")
-            fo = pool.submit(self.pipes["order"].refresh)
-            out = {"customer": fc.result(), "item": fi.result()}
-            fo.result()
-        out["order"] = self.dags["order"].run_cycle()
+        Each chain keeps its own gates and failure semantics: a dim
+        chain that was SKIPPED or FAILED still lets the fact run. A dim
+        cycle that raises records ``fact_order_tsk`` FAILED with its
+        error; once all three cycles have ended the first exception, in
+        customer, item, order order, is re-raised. An injected ``clock``
+        is called from several threads."""
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            dims = {e: pool.submit(self.run_cycle, e) for e in ("customer", "item")}
+            wait = {"fact_order_tsk": lambda: [f.result() for f in dims.values()]}
+            try:
+                self.pipes["order"].refresh()
+                order = self.dags["order"].run_cycle(wait)
+            finally:
+                # a dim cycle's exception takes precedence over order's
+                out = {e: f.result() for e, f in dims.items()}
+        out["order"] = order
         return out
 
     def run_streaming(
@@ -488,9 +484,11 @@ class EntityPipelines:
         checkpoint; the merge bodies are idempotent (T1), so a crash
         between stage append and offset commit replays safely.
 
-        Cross-entity ordering still matters (order joins both dims,
-        order-...sql:204-207): start customer/item queries before the
-        order query, or drive order in batch mode after them.
+        Each query runs one entity's chain alone, so nothing orders the
+        fact task after the dims (order-...sql:204-207): a fact batch
+        joins whatever dim state has landed. Run the customer and item
+        queries to completion before the order query, or use
+        ``run_all``, which waits for both dim cycles before the fact.
         """
         dag = self.dags[entity]
         return self.pipes[entity].start_stream(

@@ -11,7 +11,8 @@ Semantics implemented:
 - WHEN is a cheap pre-check; a false WHEN records SKIPPED and stops the
   chain (children fire only after a parent actually ran — Snowflake's
   behavior for a skipped root).
-- A task exception records FAILED and stops the chain.
+- A task exception, raised by its body or its WHEN, records FAILED
+  and stops the chain.
 - ``run_cycle`` executes one scheduled wake-up; ``run_forever`` loops
   with the schedule interval (the '1 minute' mode). In Spark the cycle
   is driver-side choreography only — every body is a DataFrame job, so
@@ -23,7 +24,7 @@ from __future__ import annotations
 
 import time
 import traceback
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -49,8 +50,14 @@ class TaskRun:
 
 
 class TaskDag:
-    """Linear AFTER-chained DAG (the only shape the reference uses;
-    ``after`` pointers would support trees unchanged)."""
+    """Linear AFTER-chained DAG, the only shape the reference uses.
+
+    A wake-up walks the chain in order and stops at the first task that
+    does not succeed. The one cross-DAG dependency the reference has
+    (the fact task reads both dims, order-...sql:204-207) is not an
+    edge here: ``run_cycle`` takes a per-task ``wait`` that blocks
+    until another DAG's cycle has ended, so each chain keeps its own
+    history, gates and failure semantics."""
 
     def __init__(self, spark: SparkSession, name: str):
         self.spark = spark
@@ -76,45 +83,53 @@ class TaskDag:
                 return t
         raise KeyError(name)
 
-    def run_cycle(self) -> list[TaskRun]:
+    def run_cycle(
+        self, wait: Mapping[str, Callable[[], object]] | None = None
+    ) -> list[TaskRun]:
         """One wake-up: walk the chain in order; stop at the first
-        skip/failure (children only run after a parent ran)."""
+        task that does not succeed (children only run after a parent
+        ran).
+
+        ``wait`` maps a task name to a callable run just before that
+        task; the task is scheduled when it returns. A WHEN predicate,
+        a wait or a body that raises records the task FAILED."""
+        wait = wait or {}
         runs: list[TaskRun] = []
         for task in self.tasks:
-            scheduled = datetime.now(timezone.utc)
-            if not task.enabled:
-                runs.append(TaskRun(task.name, "SUSPENDED", scheduled, None))
-                break
-            if task.when is not None and not task.when():
-                runs.append(TaskRun(task.name, "SKIPPED", scheduled, None))
-                break
-            try:
-                # label every job the body submits (guide §1.5) — the
-                # description is thread-local, so concurrent entity
-                # cycles (entities.run_all) label correctly per thread
-                self.spark.sparkContext.setJobDescription(
-                    f"task {self.name}.{task.name}"
-                )
-                try:
-                    task.body()
-                finally:
-                    self.spark.sparkContext.setJobDescription(None)
-                runs.append(
-                    TaskRun(task.name, "SUCCEEDED", scheduled, datetime.now(timezone.utc))
-                )
-            except Exception:
-                runs.append(
-                    TaskRun(
-                        task.name,
-                        "FAILED",
-                        scheduled,
-                        datetime.now(timezone.utc),
-                        traceback.format_exc(limit=3),
-                    )
-                )
+            run = self._run(task, wait.get(task.name))
+            runs.append(run)
+            if run.state != "SUCCEEDED":
                 break
         self.history.extend(runs)
         return runs
+
+    def _run(self, task: Task, wait: Callable[[], object] | None) -> TaskRun:
+        scheduled = datetime.now(timezone.utc)
+        if not task.enabled:
+            return TaskRun(task.name, "SUSPENDED", scheduled, None)
+        try:
+            if wait is not None:
+                wait()
+                scheduled = datetime.now(timezone.utc)
+            if task.when is not None and not task.when():
+                return TaskRun(task.name, "SKIPPED", scheduled, None)
+            # label every job the body submits; the description is
+            # thread-local, so concurrent entity cycles (entities.run_all)
+            # label correctly per thread
+            self.spark.sparkContext.setJobDescription(f"task {self.name}.{task.name}")
+            try:
+                task.body()
+            finally:
+                self.spark.sparkContext.setJobDescription(None)
+        except Exception:
+            return TaskRun(
+                task.name,
+                "FAILED",
+                scheduled,
+                datetime.now(timezone.utc),
+                traceback.format_exc(limit=3),
+            )
+        return TaskRun(task.name, "SUCCEEDED", scheduled, datetime.now(timezone.utc))
 
     def run_forever(self, interval_seconds: float = 60.0, max_cycles: int | None = None) -> None:
         """schedule='1 minute' mode (customer-...sql:64)."""

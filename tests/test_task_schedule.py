@@ -1,0 +1,234 @@
+"""The wake-up schedule: ``TaskDag.run_cycle`` gates, waits and failure
+records, and ``EntityPipelines.run_all``'s one cross-entity edge (the
+fact task starts after both dim cycles). Hermetic: every input is a
+small CSV written by the test."""
+
+from __future__ import annotations
+
+from datetime import datetime, timezone
+
+import pytest
+
+from end_to_end_etl_using_snowflake_spark.pipelines.entities import EntityPipelines
+from end_to_end_etl_using_snowflake_spark.plans.catalog import Warehouse
+from end_to_end_etl_using_snowflake_spark.sources import csv_format as CF
+from end_to_end_etl_using_snowflake_spark.streaming.tasks import Task, TaskDag
+
+
+def _states(runs) -> list[tuple[str, str]]:
+    return [(r.task_name, r.state) for r in runs]
+
+
+def test_raising_when_records_failed_and_stops_the_chain(spark):
+    ran = []
+
+    def broken_gate():
+        raise RuntimeError("gate exploded")
+
+    dag = TaskDag(spark, "t")
+    dag.add(Task("root", body=lambda: ran.append("root"), when=broken_gate))
+    dag.add(Task("child", body=lambda: ran.append("child"), after="root"))
+    runs = dag.run_cycle()
+    assert _states(runs) == [("root", "FAILED")]
+    assert "gate exploded" in runs[0].error
+    assert runs[0].completed_time is not None
+    assert ran == []
+    assert _states(dag.history) == [("root", "FAILED")]
+    assert [r.state for r in dag.task_history().collect()] == ["FAILED"]
+
+
+def test_wait_runs_before_its_task_and_a_raising_wait_fails_it(spark):
+    events = []
+    dag = TaskDag(spark, "t")
+    dag.add(Task("a", body=lambda: events.append("a")))
+    dag.add(Task("b", body=lambda: events.append("b"), after="a"))
+
+    runs = dag.run_cycle({"b": lambda: events.append("wait b")})
+    assert events == ["a", "wait b", "b"]
+    assert _states(runs) == [("a", "SUCCEEDED"), ("b", "SUCCEEDED")]
+
+    def upstream_failed():
+        raise ValueError("upstream cycle raised")
+
+    runs = dag.run_cycle({"b": upstream_failed})
+    assert _states(runs) == [("a", "SUCCEEDED"), ("b", "FAILED")]
+    assert "upstream cycle raised" in runs[1].error
+    assert events == ["a", "wait b", "b", "a"]
+
+
+# ----------------------------------------------------------------------
+# run_all over generated CSVs
+# ----------------------------------------------------------------------
+
+
+def _write(landing, entity: str, name: str, rows: list[tuple]) -> None:
+    header = ",".join(CF.STAGE_SCHEMAS[entity].names)
+    lines = [header, *(",".join(r) for r in rows)]
+    (landing / entity / f"{name}.csv").write_text("\n".join(lines) + "\n")
+
+
+def _customer(i: int) -> tuple:
+    return (f"C{i}", "Mr.", f"F{i}", f"L{i}", "1", "2", "1990", "X", f"c{i}@x.com", "Y")
+
+
+def _item(i: int) -> tuple:
+    return (f"I{i}", f"item {i}", "2020-01-01", "", "9.99", "cls", "cat", "Y")
+
+
+def _order(day: int, cust: int, item: int, qty: int = 1) -> tuple:
+    return (
+        f"2021-03-{day:02d}", f"10:{cust:02d}:{item:02d} AM", f"I{item}", f"item {item}",
+        f"C{cust}", "Mr.", f"F{cust}", f"L{cust}", "S1", "store", str(qty),
+        "10.00", "0.00", "0.00", "10.00", "10.80", "2.00",
+    )
+
+
+@pytest.fixture
+def pipeline(spark, tmp_path):
+    landing = tmp_path / "landing"
+    for e in ("customer", "item", "order"):
+        (landing / e).mkdir(parents=True)
+
+    def make(fact_mode: str = "rebuild") -> EntityPipelines:
+        clock = lambda: datetime(2022, 3, 1, tzinfo=timezone.utc)  # noqa: E731
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        return EntityPipelines(spark, wh, str(landing), clock=clock, fact_mode=fact_mode)
+
+    _write(landing, "customer", "c0", [_customer(i) for i in range(3)])
+    _write(landing, "item", "i0", [_item(i) for i in range(2)])
+    _write(landing, "order", "o0", [_order(1, 0, 0), _order(1, 1, 1, qty=2)])
+    return landing, make
+
+
+def _fact(p: EntityPipelines) -> dict[tuple, int]:
+    """(customer_id, item_id, order_date) -> order_quantity."""
+    cust = {r.customer_dim_key: r.customer_id for r in p.dim_customer.read().collect()}
+    item = {r.item_dim_key: r.item_id for r in p.dim_item.read().collect()}
+    return {
+        (cust[r.customer_dim_key], item[r.item_dim_key], str(r.order_date)): r.order_quantity
+        for r in p.fact_order.read().collect()
+    }
+
+
+def _all_succeeded(runs, entities=("customer", "item", "order")) -> bool:
+    return all([r.state for r in runs[e]] == ["SUCCEEDED"] * 5 for e in entities)
+
+
+@pytest.mark.parametrize("fact_mode", ["rebuild", "incremental"])
+def test_new_customer_and_its_first_order_land_in_one_wake_up(pipeline, fact_mode):
+    landing, make = pipeline
+    p = make(fact_mode)
+    assert _all_succeeded(p.run_all())
+
+    _write(landing, "customer", "c1", [_customer(7)])
+    _write(landing, "order", "o1", [_order(2, 7, 1, qty=5)])
+    runs = p.run_all()
+    assert _all_succeeded(runs, ("customer", "order"))
+    assert _states(runs["item"]) == [("pause_pipe_item", "SKIPPED")]
+    new_key = [r.customer_dim_key for r in p.dim_customer.read().collect()
+               if r.customer_id == "C7"]
+    assert len(new_key) == 1
+    fact = p.fact_order.read().collect()
+    assert [(r.customer_dim_key, r.order_quantity) for r in fact
+            if str(r.order_date) == "2021-03-02"] == [(new_key[0], 5)]
+    assert _fact(p) == {
+        ("C0", "I0", "2021-03-01"): 1,
+        ("C1", "I1", "2021-03-01"): 2,
+        ("C7", "I1", "2021-03-02"): 5,
+    }
+
+
+def test_order_only_batch_rebuilds_fact_with_both_dim_roots_skipped(pipeline):
+    landing, make = pipeline
+    p = make()
+    p.run_all()
+
+    _write(landing, "order", "o1", [_order(3, 2, 0, qty=4)])
+    runs = p.run_all()
+    assert _states(runs["customer"]) == [("pause_pipe_customer", "SKIPPED")]
+    assert _states(runs["item"]) == [("pause_pipe_item", "SKIPPED")]
+    assert [r.state for r in runs["order"]] == ["SUCCEEDED"] * 5
+    assert _fact(p)[("C2", "I0", "2021-03-03")] == 4
+
+
+def test_fact_task_is_scheduled_after_both_dim_cycles_end(pipeline):
+    _, make = pipeline
+    p = make()
+    runs = p.run_all()
+    assert _all_succeeded(runs)
+    fact = next(r for r in runs["order"] if r.task_name == "fact_order_tsk")
+    for e in ("customer", "item"):
+        dim = next(r for r in runs[e] if r.task_name == f"dim_{e}_tsk")
+        assert fact.scheduled_time >= dim.completed_time
+        assert fact.scheduled_time >= runs[e][-1].completed_time
+
+
+def test_raising_dim_cycle_fails_the_fact_and_next_wake_up_recovers(pipeline):
+    landing, make = pipeline
+    p = make()
+    p.run_all()
+
+    _write(landing, "customer", "c1", [_customer(8)])
+    _write(landing, "order", "o1", [_order(4, 8, 0)])
+    refresh = p.pipes["customer"].refresh
+
+    def broken_refresh():
+        raise OSError("landing zone unreachable")
+
+    p.pipes["customer"].refresh = broken_refresh
+    history = {e: len(d.history) for e, d in p.dags.items()}
+    with pytest.raises(OSError, match="landing zone unreachable"):
+        p.run_all()
+    assert len(p.dags["customer"].history) == history["customer"]
+    assert [r.state for r in p.dags["item"].history[history["item"]:]] == ["SKIPPED"]
+    order = p.dags["order"].history[history["order"]:]
+    assert _states(order) == [
+        ("pause_pipe_order", "SUCCEEDED"),
+        ("order_raw_tsk", "SUCCEEDED"),
+        ("fact_order_tsk", "FAILED"),
+    ]
+    assert "landing zone unreachable" in order[-1].error
+    assert p.pipes["order"].paused
+
+    p.pipes["customer"].refresh = refresh
+    runs = p.run_all()
+    assert [r.state for r in runs["customer"]] == ["SUCCEEDED"] * 5
+    assert [r.state for r in runs["order"]] == ["SUCCEEDED"] * 5
+    assert not p.pipes["order"].paused
+    assert _fact(p)[("C8", "I0", "2021-03-04")] == 1
+
+
+def test_transform_failure_does_not_leave_the_pipe_paused(pipeline):
+    """A transform that fails after its raw task committed the stage
+    offset leaves the pipe paused and the stage stream empty. The next
+    wake-up must still finish the chain, or no file ever lands again."""
+    landing, make = pipeline
+    p = make()
+    p.run_all()
+    assert p.dim_customer.read().count() == 3
+
+    dim_task = p.dags["customer"]._get("dim_customer_tsk")
+    body = dim_task.body
+
+    def fail_once():
+        dim_task.body = body
+        raise RuntimeError("injected dim failure")
+
+    dim_task.body = fail_once
+    _write(landing, "customer", "c1", [_customer(i) for i in range(3, 6)])
+    runs = p.run_all()
+    assert runs["customer"][-1].task_name == "dim_customer_tsk"
+    assert runs["customer"][-1].state == "FAILED"
+    assert p.pipes["customer"].paused
+
+    _write(landing, "customer", "c2", [_customer(i) for i in range(6, 8)])
+    runs = p.run_all()
+    assert [r.state for r in runs["customer"]] == ["SUCCEEDED"] * 5
+    assert not p.pipes["customer"].paused
+    assert p.dim_customer.read().count() == p.raw["customer"].read().count() == 6
+
+    p.run_all()  # the file that landed while the pipe was paused
+    assert p.dim_customer.read().count() == 8
+
+    runs = p.run_all()  # idle: the gate skips again
+    assert _states(runs["customer"]) == [("pause_pipe_customer", "SKIPPED")]

@@ -1,0 +1,86 @@
+"""Task timeline of ``EntityPipelines.run_all`` wake-ups.
+
+Lands perfbench's seeded ``trickle`` inputs (``perfbench/gen.py``) in a
+scratch directory, runs the initial load of an incremental warehouse as
+cycle 0 and then ``--cycles`` cycles (one generated batch plus one
+``run_all()`` each), and prints every task's start and end offset from
+the start of its ``run_all()``, read from the engine's own task history
+(``dags[e].history``). A SKIPPED or SUSPENDED task has no end.
+
+Usage:
+    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR]
+
+Measurement-only tooling: never imported by the engine or bench.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import shutil
+import sys
+import tempfile
+import time
+from datetime import datetime, timezone
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+import gen  # noqa: E402
+
+from end_to_end_etl_using_snowflake_spark.pipelines.entities import (  # noqa: E402
+    EntityPipelines,
+)
+from end_to_end_etl_using_snowflake_spark.plans.catalog import Warehouse  # noqa: E402
+from end_to_end_etl_using_snowflake_spark.session import get_spark  # noqa: E402
+
+CLOCK = datetime(2021, 6, 1, tzinfo=timezone.utc)
+
+
+def timeline(etl: EntityPipelines) -> tuple[float, list[tuple[float, float | None, str, str]]]:
+    """Run one wake-up; return its wall seconds and (start, end, task,
+    state) offsets in seconds from the start of ``run_all``."""
+    seen = {e: len(d.history) for e, d in etl.dags.items()}
+    t0 = datetime.now(timezone.utc)
+    p0 = time.perf_counter()
+    etl.run_all()
+    wall = time.perf_counter() - p0
+    rows = []
+    for e, d in etl.dags.items():
+        for r in d.history[seen[e]:]:
+            end = (r.completed_time - t0).total_seconds() if r.completed_time else None
+            rows.append(((r.scheduled_time - t0).total_seconds(), end, r.task_name, r.state))
+    return wall, sorted(rows, key=lambda row: row[0])
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--cycles", type=int, default=3)
+    ap.add_argument("--work", default=None, help="scratch directory (default: a temp dir)")
+    args = ap.parse_args()
+
+    work = tempfile.mkdtemp(prefix="task_timeline_", dir=args.work)
+    spark = get_spark()
+    try:
+        landing = os.path.join(work, "landing")
+        ds = gen.build(args.seed, gen.SHAPES["trickle"])
+        gen.write_initial(ds, landing)
+        wh = Warehouse(spark, os.path.join(work, "warehouse"))
+        etl = EntityPipelines(spark, wh, landing, clock=lambda: CLOCK, fact_mode="incremental")
+        for cycle in range(args.cycles + 1):
+            if cycle:
+                gen.write_batch(ds, cycle, landing)
+            wall, rows = timeline(etl)
+            print(f"cycle {cycle}: run_all {wall:.2f} s")
+            for start, end, name, state in rows:
+                span = f"{start:6.2f} -> {end:6.2f}" if end is not None else f"{start:6.2f}          "
+                print(f"  {span}  {name:34s} {state}")
+    finally:
+        spark.stop()
+        shutil.rmtree(work, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()
