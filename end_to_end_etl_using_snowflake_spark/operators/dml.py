@@ -5,13 +5,14 @@ swap. Every mutation is therefore expressed as "compute the post-state
 DataFrame, then atomically replace the table" — which is also the right
 shape at 100 TB (rewrite only affected partitions, never row-by-row).
 
-Write protocol (crash-safe): write to ``<table>.__tmp_<uuid>`` ->
-rename the live directory to ``<table>.__old_<uuid>`` -> rename the
-temp in -> delete old. A crash between the two renames leaves no table
-directory; opening the table rolls that back (``ParquetTable``).
-Re-running a failed step is safe because every post-state computation
-here is idempotent for the same inputs (MERGE included — see
-operators.merge).
+Write protocol (crash-safe): a commit writes its rows once, in the
+table's layout, to ``<table>.__tmp_<uuid>``, then renames the live
+table (or, per partition of the temp, the live partition) into the
+sibling ``<table>.__old_<uuid>`` (``__parts_<uuid>``) and the temp's in.
+A crash between two renames leaves the table or one partition missing;
+opening the table rolls that back (``ParquetTable``). Re-running a
+failed step is safe because every post-state computation here is
+idempotent for the same inputs (MERGE included — see operators.merge).
 """
 
 from __future__ import annotations
@@ -174,14 +175,14 @@ class ParquetTable:
         self._recover_swap()
 
     def _recover_swap(self) -> None:
-        """Roll back a swap interrupted between its two renames: the
-        table directory is missing but an ``__old_`` sibling holds the
-        last committed state. The newest such sibling is renamed back
-        and the swap's stray temp (and any older half-deleted
-        ``__old_`` sibling) is removed, so ``exists()`` never reports a
+        """Roll back a publish interrupted between two renames: a
+        missing table directory gets its newest ``__old_`` sibling back,
+        and a missing partition its copy in a ``__parts_`` sibling
+        (partitions already published stay). Stray temps and holding
+        directories are then removed, so ``exists()`` never reports a
         committed table as missing after a crash."""
         parent, name = os.path.split(self.path)
-        if os.path.exists(self.path) or not os.path.isdir(parent):
+        if not os.path.isdir(parent):
             return
         siblings = os.listdir(parent)
 
@@ -193,10 +194,16 @@ class ParquetTable:
             ]
 
         olds = sorted(named("__old_"), key=lambda p: os.stat(p).st_ctime)
-        if not olds:
+        held = named("__parts_")
+        if olds and not self.exists():
+            os.rename(olds.pop(), self.path)
+        elif not held:
             return
-        os.rename(olds.pop(), self.path)
-        for p in olds + named("__tmp_"):
+        for hold in held:
+            for part in os.listdir(hold):
+                if not os.path.exists(os.path.join(self.path, part)):
+                    os.rename(os.path.join(hold, part), os.path.join(self.path, part))
+        for p in olds + held + named("__tmp_"):
             shutil.rmtree(p, ignore_errors=True)
 
     def exists(self) -> bool:
@@ -235,15 +242,14 @@ class ParquetTable:
         the same atomic rename (e.g. DynamicTable's ``_applied_version``
         stamp). Names must start with ``_`` — Spark and parquet globs
         ignore underscore-prefixed files."""
-        tmp = self.write_tmp(df, sidecar)
-        self.swap_tmp(tmp)
+        self.swap_tmp(self.write_tmp(df, sidecar))
 
     def write_tmp(self, df: DataFrame, sidecar: Mapping[str, str] | None = None) -> str:
-        """The write half of ``overwrite``: materialize ``df`` into a
-        temp directory next to the table and return its path — split
-        out (r16) so a caller can hardlink the freshly-written files
-        into a changelog version BEFORE the swap (one compute + one
-        write for what used to be two of each)."""
+        """The write half of every commit: materialize ``df`` once, in
+        the table's layout, into a temp directory next to the table and
+        return its path. A caller can hard-link the freshly written
+        files into a changelog version before publishing them
+        (``swap_tmp`` or ``swap_partitions``)."""
         tmp = f"{self.path}.__tmp_{uuid.uuid4().hex[:8]}"
         writer = self._clustered(df).write.mode("overwrite")
         if self.partition_by:
@@ -263,18 +269,36 @@ class ParquetTable:
         next time the table is opened (``_recover_swap``)."""
         _swap(self.path, tmp, f"{self.path}.__old_{uuid.uuid4().hex[:8]}")
 
+    def swap_partitions(self, tmp: str) -> None:
+        """The commit half of ``overwrite_partitions``: swap each
+        partition directory of ``tmp`` in for the table's; the others
+        are untouched. An unpartitioned table is one partition, and a
+        missing one has none to keep: both are swapped whole."""
+        if not (self.partition_by and self.exists()):
+            self.swap_tmp(tmp)
+            return
+        hold = f"{self.path}.__parts_{uuid.uuid4().hex[:8]}"
+        os.makedirs(hold)
+        for part in os.listdir(tmp):
+            if not _hidden(part):  # skips _SUCCESS and checksums
+                live = os.path.join(self.path, part)
+                _swap(live, os.path.join(tmp, part), os.path.join(hold, part))
+        shutil.rmtree(hold)
+        shutil.rmtree(tmp)
+
+    def add_tmp(self, tmp: str) -> None:
+        """The commit half of an append to an unpartitioned table: move
+        the part files of ``tmp`` in (part names are unique per write)."""
+        os.makedirs(self.path, exist_ok=True)
+        for path in data_files(tmp):
+            os.rename(path, os.path.join(self.path, os.path.basename(path)))
+        shutil.rmtree(tmp)
+
     def overwrite_partitions(self, df: DataFrame) -> None:
-        """Dynamic partition overwrite: replace only the partitions
-        present in ``df`` (the 100 TB-friendly fact maintenance path)."""
-        if not self.partition_by:
-            raise ValueError("overwrite_partitions requires partition_by")
-        (
-            self._clustered(df)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*self.partition_by)
-            .parquet(self.path)
-        )
+        """Replace only the partitions present in ``df`` (the
+        O(touched partitions) fact maintenance path): one write to a
+        temp directory, then ``swap_partitions``."""
+        self.swap_partitions(self.write_tmp(df))
 
     def truncate(self, schema) -> None:
         """TRUNCATE is a metadata operation, not a job: swap in an

@@ -22,12 +22,13 @@ AQE broadcasts it and the target is never shuffled.
 
 Scale notes (100 TB target):
 
-- For a date-partitioned target, restrict the merge to partitions that
-  contain source keys (merge-on-read compaction trick): untouched
-  partitions are never read or rewritten. The pieces exist as
-  ``ParquetTable.overwrite_partitions`` + ``incremental_agg_merge``
-  (driver query m7); the reference-parity pipelines deliberately keep
-  the reference's full rebuild (order-...sql:179).
+- For a month-partitioned target, the merge reads and rewrites only
+  the partitions that contain source keys; untouched partitions are
+  never read or rewritten. The incremental pipeline's raw_order task
+  does this (``ManagedTable.read_partitions`` +
+  ``overwrite_partitions``); ``incremental_agg_merge`` is the additive
+  fact variant (registry query m7). The rebuild-mode pipelines keep the
+  reference's full rebuild (order-...sql:179).
 - The dedup window shuffles only the source batch, never the target.
 - Identity assignment sorts only the *insert* batch, not the table.
 """

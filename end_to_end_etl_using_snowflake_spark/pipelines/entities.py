@@ -18,9 +18,9 @@ The clock is injectable so ``current_timestamp()`` defaults
 (customer-...sql:42-43) are testable against golden outputs.
 
 Scale: dims merge via broadcast-anti-join (CDC batches are tiny);
-fact_order is INSERT OVERWRITE like the reference (order-...sql:179) —
-at 100 TB the same task body runs with ``overwrite_partitions`` on
-order_date so a daily batch rewrites only touched dates.
+fact_order is INSERT OVERWRITE like the reference (order-...sql:179);
+in ``fact_mode="incremental"`` the order tasks ``overwrite_partitions``
+on a ``__month`` key, so a daily batch rewrites only touched months.
 """
 
 from __future__ import annotations
@@ -80,7 +80,7 @@ class EntityPipelines:
           order_date business key, never in the logical schema); a
           cycle partition-prunes the raw MERGE to the months the batch
           carries, recomputes ONLY those months of the fact, and
-          dynamic-partition-overwrites them — O(touched partitions),
+          overwrites those partitions — O(touched partitions),
           exact even when the batch *updates* an existing order (the
           whole affected month is recomputed from raw, so no
           delta-vs-old bookkeeping). Assumes dim key mappings are
@@ -233,11 +233,11 @@ class EntityPipelines:
         ]
         partitioned = bool(raw.storage.partition_by)
         exists = raw.storage.exists()
-        # an unpartitioned initial load's post-state IS the deduped
-        # batch: it is written once and the changelog version hardlinks
-        # those files (r16). Every other commit also records the batch
-        # itself, so the one dedup pass is cached for both consumers.
-        link = not (exists or partitioned)
+        # an initial load's post-state IS the deduped batch: it is
+        # written once and the changelog version hardlinks those files
+        # (r16). Every other commit also records the batch itself, so
+        # the one dedup pass is cached for both consumers.
+        link = not exists
         deduped = M.dedup_latest(src.drop("_action"), keys, order_cols)
         if not link:
             deduped = deduped.persist()
@@ -256,9 +256,8 @@ class EntityPipelines:
                 # that keeps a continuously-merged 100 TB raw table
                 # maintainable.
                 target = raw.read_partitions(_touched_months(deduped))
-                commit = raw.overwrite_partitions
             else:
-                target, commit = raw.read(), raw.overwrite
+                target = raw.read()
             out = M.merge_dataframes(
                 target,
                 deduped,
@@ -267,7 +266,8 @@ class EntityPipelines:
             ).select(*raw.schema.names)
             if partitioned:
                 out = out.withColumn("__month", _month())
-            commit(out, changes=None if link else deduped.drop("_version"))
+            # the touched months of a partitioned raw; all of a flat one
+            raw.overwrite_partitions(out, changes=None if link else deduped.drop("_version"))
         finally:
             if not link:
                 deduped.unpersist()
@@ -412,13 +412,10 @@ class EntityPipelines:
             )
             out = rebuilt.select(*fact.schema.names)
             if incremental:
-                # rewrite only the touched month partitions; changelog
-                # records the rewritten groups (UPSERT granularity)
-                commit = (
-                    fact.overwrite_partitions if fact.storage.exists() else fact.overwrite
-                )
+                # rewrite only the touched month partitions; the changelog
+                # links the rewritten groups (UPSERT granularity)
                 month = F.date_format(F.col("order_date"), "yyyy-MM")
-                commit(out.withColumn("__month", month), changes=out)
+                fact.overwrite_partitions(out.withColumn("__month", month))
             else:
                 fact.overwrite(out)
         finally:

@@ -13,13 +13,13 @@ introspection surface (customer-...sql:205-207).
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.dml import ParquetTable, data_files, empty_frame
+from ..operators.dml import ParquetTable, empty_frame
 from ..streaming.changelog import Changelog
 
 SCHEMAS = ("stg", "raw", "transformed")
@@ -100,73 +100,51 @@ class ManagedTable:
             return empty_frame(self.spark, self.schema)
         return self.spark.read.schema(self.schema).parquet(*dirs)
 
-    def append(self, df: DataFrame, action: str = "INSERT") -> int:
-        """INSERT INTO + change record. For an unpartitioned table the
-        batch is computed and written ONCE — the changelog commit
-        records the same rows, then the table append hardlinks the
-        just-written version files (r16: the old shape ran the full
-        input plan twice, e.g. the pipe ingest re-read every landing
-        CSV for the changelog job). Crash between record and link:
-        change rows exist that the table lacks — same class as the old
-        order's inverse window; callers re-run (COPY's write-then-mark
-        re-loads, merges dedup per key), so the step stays idempotent.
-        Partitioned tables keep the two-write path (their table layout
-        differs from the changelog's)."""
-        if self.storage.partition_by:
-            self.storage.append(df)
-            return self.changelog.record(df, action)
-        version = self.changelog.record(df, action)
-        src = os.path.join(
-            self.changelog.log_path, f"_version={version}", f"_action={action}"
-        )
-        os.makedirs(self.storage.path, exist_ok=True)
-        for path in data_files(src):
-            f = os.path.basename(path)
-            target = os.path.join(self.storage.path, f)
-            if os.path.exists(target):  # part names are unique
-                target = os.path.join(self.storage.path, f"v{version}-{f}")
-            os.link(path, target)
+    def _commit(
+        self, df: DataFrame, changes: DataFrame | None, action: str, publish: Callable[[str], None]
+    ) -> int:
+        """The one commit behind every mutation: write ``df`` once, in
+        the table's layout, to a temp directory and record the change
+        version — by hard-linking those files when ``changes`` is None
+        (the change rows are the rows written), else by writing
+        ``changes``, e.g. a MERGE's applied batch; then ``publish``.
+        Both plans run before the publish, so ``df`` may read this
+        table. A crash before the publish leaves change rows the table
+        lacks; callers re-run the step (COPY re-loads unmarked files,
+        merges are idempotent per key)."""
+        # a given batch is written first: it is the cached source of
+        # df's plan, and a filled cache saves that plan a Spark job
+        if changes is not None:
+            version = self.changelog.record(changes, action)
+        tmp = self.storage.write_tmp(df)
+        if changes is None:
+            version = self.changelog.record_linked(tmp, action)
+        publish(tmp)
         return version
+
+    def append(self, df: DataFrame, action: str = "INSERT") -> int:
+        """INSERT INTO: the written rows are the change rows, and the
+        part files move into the table. Unpartitioned tables only: no
+        caller appends to a partitioned one."""
+        if self.storage.partition_by:
+            raise ValueError(f"append to a partitioned table: {self.path}")
+        return self._commit(df, None, action, self.storage.add_tmp)
 
     def overwrite(self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT") -> int:
-        """Atomic replace; ``changes`` (default: the full new content)
-        is what lands in the changelog — for a MERGE pass the applied
-        source batch, not the whole post-state.
-
-        Order matters: the changelog is recorded BEFORE the swap so both
-        plans read the pre-swap table (ParquetTable.overwrite itself is
-        write-temp-then-rename, so ``df`` reading this table is safe).
-        A crash in between leaves extra change rows; re-running the step
-        is safe because downstream merges are idempotent per key.
-
-        ``changes=None`` + unpartitioned table takes the shared-write
-        path (r16): ``df`` is computed and written once to the temp
-        dir, the changelog version hardlinks those files
-        (Changelog.record_linked — zero copies), then the swap lands.
-        Same crash discipline: the changelog still commits before the
-        table becomes visible.
-        """
-        if changes is None and not self.storage.partition_by:
-            tmp = self.storage.write_tmp(df)
-            version = self.changelog.record_linked(tmp, action)
-            self.storage.swap_tmp(tmp)
-            return version
-        version = self.changelog.record(changes if changes is not None else df, action)
-        self.storage.overwrite(df)
-        return version
+        """Atomic replace of the whole table by ``df``. ``changes``
+        (default: the rows written) is what lands in the changelog."""
+        return self._commit(df, changes, action, self.storage.swap_tmp)
 
     def overwrite_partitions(
         self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT"
     ) -> int:
         """Partition-scoped replace (the partition-pruned MERGE commit):
-        only the partitions present in ``df`` are rewritten; the
-        changelog records the applied batch exactly as ``overwrite``
-        does, so stream consumers are agnostic to which commit path a
-        producer used. Same ordering/crash discipline as ``overwrite``.
-        """
-        version = self.changelog.record(changes if changes is not None else df, action)
-        self.storage.overwrite_partitions(df)
-        return version
+        only the partitions present in ``df`` are rewritten, and a
+        missing table is created. An unpartitioned table is one
+        partition, so it is replaced whole, as ``overwrite`` does.
+        ``changes`` as in ``overwrite``, so stream consumers do not
+        depend on which commit a producer used."""
+        return self._commit(df, changes, action, self.storage.swap_partitions)
 
     def truncate(self) -> int:
         """M5 TRUNCATE (customer-...sql:172)."""

@@ -104,27 +104,24 @@ class Changelog:
             .partitionBy(VERSION_COL, ACTION_COL)
             .parquet(self.log_path)
         )
-        meta["version"] = new_version
-        meta.setdefault("rows", {})[str(new_version)] = _count_parquet_rows(
-            os.path.join(self.log_path, f"{VERSION_COL}={new_version}")
+        return self._add_version(
+            meta, os.path.join(self.log_path, f"{VERSION_COL}={new_version}"), at
         )
-        if at is not None:
-            meta.setdefault("times", {})[str(new_version)] = at
-        self._write_meta(meta)
-        return new_version
 
     def record_linked(
         self, src_dir: str, action: str, at: str | None = None
     ) -> int:
         """Commit a new version by HARDLINKING the parquet files of
-        ``src_dir`` (a directory some producer just wrote with exactly
-        the table's columns) instead of running a second write job —
-        the zero-copy half of the r16 layout. Equivalent to
-        ``record(df, action)`` for a ``df`` with the same rows: the
-        files' columns are the table columns, and ``_version`` /
-        ``_action`` live in the directory names. O(files) metadata
-        work, zero bytes copied, shared write-once inodes (same trick
-        as CLONE TABLE)."""
+        ``src_dir`` (a directory some producer just wrote in its
+        table's layout) instead of running a second write job — the
+        zero-copy half of the r16 layout. Equivalent to
+        ``record(df, action)`` for a ``df`` with the table's logical
+        columns: partition directories of ``src_dir`` are flattened
+        into the version directory, so their keys (e.g. ``__month``)
+        are not change columns, as ``ManagedTable.read()`` drops them
+        too. ``_version`` / ``_action`` live in the directory names.
+        O(files) metadata work, zero bytes copied, shared write-once
+        inodes (same trick as CLONE TABLE)."""
         meta = self._read_meta()
         new_version = meta["version"] + 1
         dst = os.path.join(
@@ -134,18 +131,24 @@ class Changelog:
         )
         os.makedirs(dst, exist_ok=True)
         for path in data_files(src_dir):
-            f = os.path.basename(path)
-            target = os.path.join(dst, f)
-            if os.path.exists(target):  # paranoid: part names are unique
-                target = os.path.join(dst, f"v{new_version}-{f}")
-            os.link(path, target)
-        rows = _count_parquet_rows(dst)
-        meta["version"] = new_version
-        meta.setdefault("rows", {})[str(new_version)] = rows
+            # partitionBy writes one part name into many partition
+            # directories: the directory makes the link name unique
+            part, f = os.path.split(os.path.relpath(path, src_dir))
+            if part:
+                f = f"{f[: -len('.parquet')]}.{part.replace(os.sep, '.')}.parquet"
+            os.link(path, os.path.join(dst, f))
+        return self._add_version(meta, dst, at)
+
+    def _add_version(self, meta: dict, version_dir: str | None, at: str | None = None) -> int:
+        """Commit the version after ``meta``'s: the row count of the
+        files in ``version_dir`` (None: zero) and commit time ``at``."""
+        v = meta["version"] = meta["version"] + 1
+        rows = _count_parquet_rows(version_dir) if version_dir else 0
+        meta.setdefault("rows", {})[str(v)] = rows
         if at is not None:
-            meta.setdefault("times", {})[str(new_version)] = at
+            meta.setdefault("times", {})[str(v)] = at
         self._write_meta(meta)
-        return new_version
+        return v
 
     def version_at(self, ts: str) -> int:
         """Greatest version whose recorded commit time is <= ``ts``
@@ -173,11 +176,7 @@ class Changelog:
 
     def bump(self) -> int:
         """Version bump with no rows (e.g. TRUNCATE)."""
-        meta = self._read_meta()
-        meta["version"] += 1
-        meta.setdefault("rows", {})[str(meta["version"])] = 0
-        self._write_meta(meta)
-        return meta["version"]
+        return self._add_version(self._read_meta(), None)
 
     # -- consumer side (the "stream") --------------------------------------
     def stream_read(self, consumer: str) -> tuple[DataFrame, int]:

@@ -11,10 +11,13 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from end_to_end_etl_using_snowflake_spark.operators.dml import data_files
 from end_to_end_etl_using_snowflake_spark.plans.catalog import ManagedTable
+from end_to_end_etl_using_snowflake_spark.streaming.changelog import Changelog
 
 
 def _table(spark, tmp_path, name="t"):
@@ -81,3 +84,98 @@ def test_overwrite_partitions_touches_only_carried_partitions(spark, tmp_path):
     for p, before in mtimes_before.items():
         after = os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
         assert after == before, f"partition {p} was rewritten"
+
+
+def _generated(spark, schema, parts: str, n: int, v: int = 0):
+    rows = [(f"{p}{i}", v + i) for p in parts for i in range(n)]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_interrupted_partition_publish_rolls_back_on_reopen(spark, tmp_path, monkeypatch):
+    """A crash between the two renames of one partition leaves that
+    partition missing from the table and held in a ``__parts_`` sibling.
+    Reopening the table puts it back and leaves the other partitions
+    alone; re-running the commit then lands the whole batch."""
+    tbl, schema = _table(spark, tmp_path)
+    base = _generated(spark, schema, "abcd", 5)
+    tbl.overwrite(_with_m(base))
+    mtimes = {
+        p: os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
+        for p in "acd"
+    }
+    delta = _generated(spark, schema, "be", 3, v=100)
+
+    rename = os.rename
+
+    def crash_between_renames(src, dst):
+        if dst == os.path.join(tbl.storage.path, "__m=b") and "__tmp_" in str(src):
+            raise RuntimeError("injected crash between a partition's renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_between_renames)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        tbl.overwrite_partitions(_with_m(delta))
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(tbl.storage.path, "__m=b"))
+
+    tbl, _ = _table(spark, tmp_path)  # reopen
+    got = {(r.k, r.v) for r in tbl.read().collect() if not r.k.startswith("e")}
+    assert got == {(r.k, r.v) for r in base.collect()}
+    for p, before in mtimes.items():
+        after = os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
+        assert after == before, f"partition {p} was touched"
+    parent, name = os.path.split(tbl.storage.path)
+    assert sorted(s for s in os.listdir(parent) if s.startswith(f"{name}.")) == [
+        f"{name}.__changelog", f"{name}.__meta.json"
+    ]
+
+    tbl.overwrite_partitions(_with_m(delta))
+    expected = {(r.k, r.v) for r in base.collect() if not r.k.startswith("b")}
+    expected |= {(r.k, r.v) for r in delta.collect()}
+    assert {(r.k, r.v) for r in tbl.read().collect()} == expected
+
+
+def test_partition_commit_links_its_change_version(spark, tmp_path):
+    """``changes=None`` on a partitioned table: the version hard-links
+    the written files, and its rows carry the logical columns only."""
+    tbl, schema = _table(spark, tmp_path)
+    tbl.overwrite_partitions(_with_m(_generated(spark, schema, "ab", 4)))
+    delta = _generated(spark, schema, "b", 2, v=50)
+    version = tbl.overwrite_partitions(_with_m(delta))
+    changes, _ = tbl.changelog.stream_read("c")
+    changes = changes.filter(F.col("_version") == version)
+    assert sorted(changes.columns) == ["_action", "_version", "k", "v"]
+    assert {(r.k, r.v) for r in changes.collect()} == {(r.k, r.v) for r in delta.collect()}
+    vdir = os.path.join(tbl.changelog.log_path, f"_version={version}")
+    linked = {os.stat(p).st_ino for p in data_files(vdir)}
+    part_b = os.path.join(tbl.storage.path, "__m=b")
+    assert linked == {os.stat(p).st_ino for p in data_files(part_b)}
+
+
+def test_append_refuses_partitioned_tables(spark, tmp_path):
+    tbl, schema = _table(spark, tmp_path)
+    with pytest.raises(ValueError, match="partitioned"):
+        tbl.append(_with_m(_generated(spark, schema, "a", 2)))
+    parent = os.path.dirname(tbl.storage.path)
+    assert not [s for s in os.listdir(parent) if s.startswith("t")]
+
+
+def test_record_linked_flattens_partitions_sharing_a_file_name(spark, tmp_path):
+    """``partitionBy`` writes one part-file name into every partition
+    directory; linking three of them into one version must not collide."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "written"
+    for i, p in enumerate("abc"):
+        (src / f"__m={p}").mkdir(parents=True)
+        table = pa.table({"k": [f"{p}{j}" for j in range(i + 1)]})
+        pq.write_table(table, src / f"__m={p}" / "part-00000-same.c000.snappy.parquet")
+    log = Changelog(spark, str(tmp_path / "t"))
+    version = log.record_linked(str(src), "UPSERT")
+    assert log._read_meta()["rows"][str(version)] == 6
+    rows, _ = log.stream_read("c")
+    assert sorted(rows.columns) == ["_action", "_version", "k"]
+    assert sorted(r.k for r in rows.collect()) == ["a0", "b0", "b1", "c0", "c1", "c2"]
+    for path in data_files(str(src)):
+        assert os.stat(path).st_nlink == 2

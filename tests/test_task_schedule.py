@@ -5,10 +5,12 @@ small CSV written by the test."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timezone
 
 import pytest
 
+from end_to_end_etl_using_snowflake_spark.operators.dml import data_files
 from end_to_end_etl_using_snowflake_spark.pipelines.entities import EntityPipelines
 from end_to_end_etl_using_snowflake_spark.plans.catalog import Warehouse
 from end_to_end_etl_using_snowflake_spark.sources import csv_format as CF
@@ -75,9 +77,9 @@ def _item(i: int) -> tuple:
     return (f"I{i}", f"item {i}", "2020-01-01", "", "9.99", "cls", "cat", "Y")
 
 
-def _order(day: int, cust: int, item: int, qty: int = 1) -> tuple:
+def _order(day: int, cust: int, item: int, qty: int = 1, month: int = 3) -> tuple:
     return (
-        f"2021-03-{day:02d}", f"10:{cust:02d}:{item:02d} AM", f"I{item}", f"item {item}",
+        f"2021-{month:02d}-{day:02d}", f"10:{cust:02d}:{item:02d} AM", f"I{item}", f"item {item}",
         f"C{cust}", "Mr.", f"F{cust}", f"L{cust}", "S1", "store", str(qty),
         "10.00", "0.00", "0.00", "10.00", "10.80", "2.00",
     )
@@ -232,3 +234,40 @@ def test_transform_failure_does_not_leave_the_pipe_paused(pipeline):
 
     runs = p.run_all()  # idle: the gate skips again
     assert _states(runs["customer"]) == [("pause_pipe_customer", "SKIPPED")]
+
+
+def _inodes(root: str) -> set[int]:
+    return {os.stat(p).st_ino for p in data_files(root)}
+
+
+def _version(table, v: int):
+    """Change rows of version ``v`` and the inodes of its files."""
+    rows = table.changelog.stream_read("probe")[0].filter(f"_version = {v}")
+    vdir = os.path.join(table.changelog.log_path, f"_version={v}")
+    return rows.drop("_version", "_action"), _inodes(vdir)
+
+
+def test_incremental_order_commits_link_their_change_versions(pipeline):
+    """The partitioned order tables commit once: each change version
+    hard-links the files the commit wrote, and its rows carry the
+    logical columns only (no ``__month``)."""
+    landing, make = pipeline
+    _write(landing, "order", "o_feb", [_order(9, 2, 0, month=2)])
+    p = make("incremental")
+    assert _all_succeeded(p.run_all())
+
+    raw = p.raw["order"]
+    rows, linked = _version(raw, 1)  # the initial load
+    assert rows.columns == raw.schema.names
+    assert sorted(map(tuple, rows.collect())) == sorted(map(tuple, raw.read().collect()))
+    assert linked == _inodes(raw.storage.path)
+
+    _write(landing, "order", "o1", [_order(2, 0, 1, qty=4)])
+    assert _all_succeeded(p.run_all(), ("order",))
+    fact = p.fact_order
+    rows, linked = _version(fact, fact.changelog.version)
+    assert rows.columns == fact.schema.names
+    march = fact.read().filter("order_date >= '2021-03-01'")
+    assert sorted(map(tuple, rows.collect())) == sorted(map(tuple, march.collect()))
+    assert march.count() == 3 and fact.read().count() == 4
+    assert linked == _inodes(os.path.join(fact.storage.path, "__month=2021-03"))
