@@ -744,7 +744,7 @@ def embedding_cosine_pairs_lsh_adaptive(
 
     The one driver-side scalar is the corpus count — pass ``n_rows``
     from table statistics (parquet footers,
-    plans/tables.py:parquet_row_count) to avoid the count job; the
+    operators/dml.py:parquet_row_count) to avoid the count job; the
     ``emb.count()`` fallback covers derived inputs. Candidate
     generation,
     scoring, and the narrow banding join are identical to the fixed
@@ -767,7 +767,7 @@ def embedding_cosine_pairs_lsh_adaptive(
 
     # the corpus count only sizes the banding key space; callers that
     # read a plain table pass it from parquet footer statistics
-    # (plans/tables.py:parquet_row_count — O(files) metadata, r17) so
+    # (operators/dml.py:parquet_row_count — O(files) metadata, r17) so
     # no full-corpus count job runs. The scan fallback keeps derived/
     # filtered inputs correct.
     if n_rows is None:

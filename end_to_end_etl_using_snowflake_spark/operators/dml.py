@@ -5,14 +5,26 @@ swap. Every mutation is therefore expressed as "compute the post-state
 DataFrame, then atomically replace the table" — which is also the right
 shape at 100 TB (rewrite only affected partitions, never row-by-row).
 
-Write protocol (crash-safe): a commit writes its rows once, in the
-table's layout, to ``<table>.__tmp_<uuid>``, then renames the live
-table (or, per partition of the temp, the live partition) into the
-sibling ``<table>.__old_<uuid>`` (``__parts_<uuid>``) and the temp's in.
-A crash between two renames leaves the table or one partition missing;
-opening the table rolls that back (``ParquetTable``). Re-running a
-failed step is safe because every post-state computation here is
-idempotent for the same inputs (MERGE included — see operators.merge).
+Write protocol (crash-safe): ``write_parquet`` is the storage layer's
+one Spark write. Every commit writes its rows once, in the table's
+layout, to a fresh ``<table>.__tmp_<uuid>``; nothing there is visible
+until a rename publishes it:
+
+- overwrite: the live table (or, per partition of the temp, the live
+  partition) renames into ``<table>.__old_<uuid>`` (``__parts_<uuid>``)
+  and the temp's in;
+- append: the temp's part files move into the table (``add_tmp``);
+- transaction: the temp renames to ``<table>.__txn_<id>`` and the
+  intent marker publishes it (``MultiTableTransaction``);
+- changelog version: the temp's files are hard-linked into a staging
+  directory that renames to ``_version=N`` (``Changelog.record_linked``).
+
+A crash before the publish leaves only a temp no reader lists; a
+crash between two renames leaves the table or one partition missing,
+and opening the table rolls that back and removes the temps
+(``ParquetTable``). Re-running a failed step is safe because every
+post-state computation here is idempotent for the same inputs (MERGE
+included — see operators.merge).
 """
 
 from __future__ import annotations
@@ -131,6 +143,35 @@ def data_files(root: str) -> Iterator[str]:
                 yield os.path.join(dirpath, f)
 
 
+def parquet_row_count(path: str) -> int:
+    """Exact row count of a parquet file, or of the data files under a
+    directory, from the FOOTERS — O(files) driver-side metadata, no
+    Spark job (the Snowflake COUNT(*)-from-micro-partition-metadata
+    semantic). 0 for a missing path."""
+    import pyarrow.parquet as pq
+
+    files = [path] if os.path.isfile(path) else data_files(path)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
+def write_parquet(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
+    """The storage layer's one Spark write: ``df`` as parquet files in
+    the new directory ``path``, one ``<col>=<value>`` directory level
+    per ``partition_by`` column.
+
+    Partitioned writes repartition by the partition key first: without
+    it every upstream task writes a file into every partition it holds
+    rows for (tasks x partitions small files — the listing tax then
+    swamps every later scan). One shuffle buys one file per partition.
+    At 100 TB, if single partitions outgrow one task, add a secondary
+    spread key here (e.g. ``repartition(key, pmod(hash(id), k))``) —
+    the layout contract (all rows of a partition value in its
+    directory) is unchanged."""
+    if partition_by:
+        df = df.repartition(*[F.col(c) for c in partition_by])
+    df.write.partitionBy(*partition_by).parquet(path)
+
+
 def hardlink_tree(src: str, dst: str) -> None:
     """Copy a directory tree as hard links — O(files) metadata, zero
     bytes copied. Safe for this engine's write-once files."""
@@ -212,25 +253,8 @@ class ParquetTable:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.path)
 
-    def _clustered(self, df: DataFrame) -> DataFrame:
-        """Partitioned writes repartition by the partition key first:
-        without it every upstream task writes a file into every
-        partition it holds rows for (tasks x partitions small files —
-        the listing tax then swamps every later scan). One shuffle
-        buys one file per partition. At 100 TB, if single partitions
-        outgrow one task, add a secondary spread key here (e.g.
-        ``repartition(key, pmod(hash(id), k))``) — the layout contract
-        (all rows of a partition value in its directory) is unchanged.
-        """
-        if not self.partition_by:
-            return df
-        return df.repartition(*[F.col(c) for c in self.partition_by])
-
     def append(self, df: DataFrame) -> None:
-        writer = self._clustered(df).write.mode("append")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.path)
+        self.add_tmp(self.write_tmp(df))
 
     def overwrite(self, df: DataFrame, sidecar: Mapping[str, str] | None = None) -> None:
         """Atomic full overwrite via write-temp-then-swap. Safe even when
@@ -251,10 +275,7 @@ class ParquetTable:
         files into a changelog version before publishing them
         (``swap_tmp`` or ``swap_partitions``)."""
         tmp = f"{self.path}.__tmp_{uuid.uuid4().hex[:8]}"
-        writer = self._clustered(df).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(tmp)
+        write_parquet(df, tmp, self.partition_by)
         for name, content in (sidecar or {}).items():
             if not name.startswith("_"):
                 raise ValueError(f"sidecar files must be underscore-prefixed: {name}")
@@ -288,7 +309,11 @@ class ParquetTable:
 
     def add_tmp(self, tmp: str) -> None:
         """The commit half of an append to an unpartitioned table: move
-        the part files of ``tmp`` in (part names are unique per write)."""
+        the part files of ``tmp`` in (part names are unique per write).
+        A partitioned table refuses, and ``tmp`` is removed."""
+        if self.partition_by:
+            shutil.rmtree(tmp)
+            raise ValueError(f"append to a partitioned table: {self.path}")
         os.makedirs(self.path, exist_ok=True)
         for path in data_files(tmp):
             os.rename(path, os.path.join(self.path, os.path.basename(path)))
@@ -400,19 +425,15 @@ class ParquetTable:
         Returns True when a rewrite happened.
 
         Unpartitioned: coalesce to ``max_files`` (narrow, no shuffle).
-        Partitioned: repartition by the partition columns so each
-        partition lands in one task -> one file per partition. The
-        rewrite reuses the atomic overwrite swap, so readers never see
+        Partitioned: the write clusters by the partition columns
+        (``write_parquet``) -> one file per partition. The rewrite
+        reuses the atomic overwrite swap, so readers never see
         a half-compacted table.
         """
         if not self.exists() or self.file_count() <= max_files:
             return False
         df = self.read()
-        if self.partition_by:
-            df = df.repartition(*[F.col(c) for c in self.partition_by])
-        else:
-            df = df.coalesce(max_files)
-        self.overwrite(df)
+        self.overwrite(df if self.partition_by else df.coalesce(max_files))
         return True
 
 
@@ -496,8 +517,9 @@ class MultiTableTransaction:
 
     Protocol (write-ahead intent + roll-forward):
 
-    1. stage: each table's post-state is written to ``<path>.__txn_<id>``
-       (full data write, crash here = garbage temps, tables untouched);
+    1. stage: each table's post-state is written to a temp
+       (``write_tmp``), which renames to ``<path>.__txn_<id>`` (crash
+       here = garbage temps, tables untouched);
     2. intent: ONE marker file ``<dir>/__txn_<id>.json`` listing every
        (table, temp, old) rename — the commit point is this single
        atomic file creation;
@@ -528,10 +550,7 @@ class MultiTableTransaction:
 
     def stage(self, table: "ParquetTable", df: DataFrame) -> None:
         tmp = f"{table.path}.__txn_{self.txn_id}"
-        writer = table._clustered(df).write.mode("overwrite")
-        if table.partition_by:
-            writer = writer.partitionBy(*table.partition_by)
-        writer.parquet(tmp)
+        os.rename(table.write_tmp(df), tmp)
         self._staged.append((table.path, tmp))
 
     @property

@@ -324,7 +324,7 @@ def hyperplane_lsh_topk_adaptive(
 
     # the corpus count only sizes the signature width; table-backed
     # callers pass it from parquet footer statistics
-    # (plans/tables.py:parquet_row_count) so no count job runs (r17)
+    # (operators/dml.py:parquet_row_count) so no count job runs (r17)
     n = corpus.count() if n_rows is None else n_rows
     r = adaptive_band_bits(n, target_occupancy, r_min, r_cap)
     return hyperplane_lsh_topk(

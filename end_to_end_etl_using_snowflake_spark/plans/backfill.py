@@ -220,12 +220,12 @@ def _audit(pipelines) -> DataFrame:
     micro-partition metadata, and the same footer reader the r16
     stream gates use), so the audit's one job is the fact aggregate
     plus three metadata literals."""
-    from ..streaming.changelog import _count_parquet_rows
+    from ..operators.dml import parquet_row_count
 
     fact = pipelines.fact_order.read()
 
     def _rows(table) -> int:
-        return _count_parquet_rows(table.storage.path)  # 0 when missing
+        return parquet_row_count(table.storage.path)  # 0 when missing
 
     audit = fact.agg(
         F.count(F.lit(1)).alias("n_fact_rows"),

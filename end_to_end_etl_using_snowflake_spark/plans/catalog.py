@@ -109,9 +109,12 @@ class ManagedTable:
         (the change rows are the rows written), else by writing
         ``changes``, e.g. a MERGE's applied batch; then ``publish``.
         Both plans run before the publish, so ``df`` may read this
-        table. A crash before the publish leaves change rows the table
-        lacks; callers re-run the step (COPY re-loads unmarked files,
-        merges are idempotent per key)."""
+        table. Every step publishes by rename (``operators.dml``). A
+        crash before the version's meta write leaves a temp or an
+        unread ``_version`` directory, which the next commit replaces;
+        a crash after it, before the publish, leaves change rows the
+        table lacks, and callers re-run the step (COPY re-loads
+        unmarked files, merges are idempotent per key)."""
         # a given batch is written first: it is the cached source of
         # df's plan, and a filled cache saves that plan a Spark job
         if changes is not None:
@@ -124,8 +127,9 @@ class ManagedTable:
 
     def append(self, df: DataFrame, action: str = "INSERT") -> int:
         """INSERT INTO: the written rows are the change rows, and the
-        part files move into the table. Unpartitioned tables only: no
-        caller appends to a partitioned one."""
+        part files move into the table (``add_tmp``). Unpartitioned
+        tables only, refused before anything is written: no caller
+        appends to a partitioned one."""
         if self.storage.partition_by:
             raise ValueError(f"append to a partitioned table: {self.path}")
         return self._commit(df, None, action, self.storage.add_tmp)

@@ -20,8 +20,9 @@ from ..operators import analysis as A
 from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as S
+from ..operators.dml import parquet_row_count
 from .registry import REGISTRY, register
-from .tables import load, parquet_row_count, rebalance_scan
+from .tables import load, rebalance_scan
 
 # ---------------------------------------------------------------------------
 # shared DuckDB SQL fragments (twins of functions.text / functions.vectors)
@@ -319,7 +320,7 @@ def d5l_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebalance_scan(load(spark, sf_dir, "embeddings"), spark),
         "vec_id", "embedding",
         threshold=0.5, bands=4, dims=64,
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+        n_rows=parquet_row_count(f"{sf_dir}/embeddings.parquet"),
     )
 
 
@@ -353,7 +354,7 @@ def d14_dedup_lsh_bucket_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.embedding_cosine_pairs_lsh_adaptive(
         load(spark, sf_dir, "embeddings"), "vec_id", "embedding",
         threshold=0.5, bands=4, dims=64, cap_factor=4,
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+        n_rows=parquet_row_count(f"{sf_dir}/embeddings.parquet"),
     )
 
 
@@ -1129,7 +1130,7 @@ def v16_ann_lsh_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.hyperplane_lsh_topk_adaptive(
         emb, emb.filter(F.col("vec_id") < 10), "vec_id", "embedding",
         k=5, dims=64, multiprobe=True,
-        n_rows=parquet_row_count(sf_dir, "embeddings"),
+        n_rows=parquet_row_count(f"{sf_dir}/embeddings.parquet"),
     )
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dml import data_files
 from ..operators.skew import is_undersplit
 
 TPCH_TABLES = (
@@ -51,28 +50,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
             )
     return df
-
-
-def parquet_row_count(sf_dir: str, name: str) -> int:
-    """Exact row count of a source table from its parquet FOOTERS —
-    O(files) driver-side metadata, no Spark job (the Snowflake
-    COUNT(*)-from-micro-partition-metadata semantic, and the same
-    footer reader the stream gates / identity seed use, r16/r17).
-
-    Feeds the adaptive-LSH geometry derivation (d5l/d14/v16), whose
-    docstrings always said "table stats at 100 TB": the corpus count
-    only sizes the banding key space, so reading it from metadata
-    removes one full-corpus Spark scan per invocation while producing
-    the exact same integer as ``df.count()`` on these append-only
-    sources.
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = f"{sf_dir}/{name}.parquet"
-    files = data_files(path) if os.path.isdir(path) else [path]
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def rebalance_scan(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -7,16 +7,25 @@ never reprocessed (T1); change rows carry insert/update/delete actions
 (T2).
 
 Plain Parquet has no CDF, so each managed table keeps a companion
-append-only changelog directory:
+changelog directory that only ever gains whole versions:
 
-    <table>.__changelog/   parquet: table columns + _action + _version
-    <table>.__meta.json    {"version": N, "offsets": {consumer: V}}
+    <table>.__changelog/_version=N/_action=A/part-*.parquet
+                           table columns; _version/_action are
+                           partition directories
+    <table>.__meta.json    {"version": N, "offsets": {consumer: V},
+                            "rows": {V: count}, "times": {V: ts}}
+
+A version is published with one rename of a complete staging
+directory to ``_version=N``; the meta's atomic replace then commits
+it. A crash between the two leaves a ``_version=N`` above the meta's
+version: readers never see it (they stop at the meta's version), and
+the next commit of version N replaces it.
 
 A *stream* is just a named consumer: reading returns rows with
-``_version > offsets[consumer]``; committing sets the offset. The
-write-table -> commit-offset sequence is crash-safe the same way
-Structured Streaming's is: a re-run re-reads the same batch and the
-downstream MERGE is idempotent for identical input.
+``offsets[consumer] < _version <= version``; committing sets the
+offset. The write-table -> commit-offset sequence is crash-safe the
+same way Structured Streaming's is: a re-run re-reads the same batch
+and the downstream MERGE is idempotent for identical input.
 
 Scale: the changelog is partitioned by ``_version`` so offset reads
 prune to new files only; metadata (one small JSON per table) stays on
@@ -29,28 +38,21 @@ import json
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dml import data_files
+from ..operators.dml import data_files, parquet_row_count, write_parquet
 
 ACTION_COL = "_action"
 VERSION_COL = "_version"
 
 
-def _count_parquet_rows(root: str) -> int:
-    """Exact row count of a just-written version directory from the
-    parquet FOOTERS — O(files) driver-side metadata reads, no Spark
-    job. Powers the stream_has_data metadata fast path (r16)."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in data_files(root))
-
-
 class Changelog:
     def __init__(self, spark: SparkSession, table_path: str):
         self.spark = spark
+        self.table_path = table_path
         self.log_path = f"{table_path}.__changelog"
         self.meta_path = f"{table_path}.__meta.json"
 
@@ -76,7 +78,7 @@ class Changelog:
 
     # -- producer side -----------------------------------------------------
     def record(self, df: DataFrame, action: str, at: str | None = None) -> int:
-        """Append change rows under a new version; returns it.
+        """Commit the rows of ``df`` as a new version; returns it.
 
         ``at`` optionally stamps the version's commit time (ISO text,
         injectable for determinism like the F1 clock) into the meta —
@@ -84,52 +86,40 @@ class Changelog:
         against (:meth:`version_at`). Unstamped versions are simply
         invisible to timestamp resolution.
 
-        Layout (r16): BOTH ``_version`` and ``_action`` are partition
-        directories (``_version=N/_action=A/part-*.parquet``), so the
-        parquet files carry exactly the table columns. Two wins at any
-        scale: a producer that just wrote the same rows to its table
-        can commit the changelog by HARDLINKING the files
-        (:meth:`record_linked` — zero bytes copied, no second job),
-        and the per-version row count is readable from the parquet
-        footers (O(files) driver metadata), which
-        :meth:`stream_has_data` uses to answer without a Spark job.
-        Readers are unchanged: partition discovery appends both
-        columns, and every consumer selects by name."""
-        meta = self._read_meta()
-        new_version = meta["version"] + 1
-        (
-            df.withColumn(ACTION_COL, F.lit(action))
-            .withColumn(VERSION_COL, F.lit(new_version))
-            .write.mode("append")
-            .partitionBy(VERSION_COL, ACTION_COL)
-            .parquet(self.log_path)
-        )
-        return self._add_version(
-            meta, os.path.join(self.log_path, f"{VERSION_COL}={new_version}"), at
-        )
+        The rows are written once, flat, to a ``<table>.__tmp_<id>``
+        sibling and published through :meth:`record_linked`, so both
+        producers share one rename-published layout. ``_version`` and
+        ``_action`` of ``df`` (a batch read from a stream carries
+        them) are dropped: the new version's own values live in its
+        directory names, and the parquet files carry exactly the
+        table columns."""
+        tmp = f"{self.table_path}.__tmp_{uuid.uuid4().hex[:8]}"
+        write_parquet(df.drop(VERSION_COL, ACTION_COL), tmp)
+        try:
+            return self.record_linked(tmp, action, at)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
 
     def record_linked(
         self, src_dir: str, action: str, at: str | None = None
     ) -> int:
         """Commit a new version by HARDLINKING the parquet files of
         ``src_dir`` (a directory some producer just wrote in its
-        table's layout) instead of running a second write job — the
-        zero-copy half of the r16 layout. Equivalent to
-        ``record(df, action)`` for a ``df`` with the table's logical
-        columns: partition directories of ``src_dir`` are flattened
-        into the version directory, so their keys (e.g. ``__month``)
-        are not change columns, as ``ManagedTable.read()`` drops them
-        too. ``_version`` / ``_action`` live in the directory names.
-        O(files) metadata work, zero bytes copied, shared write-once
-        inodes (same trick as CLONE TABLE)."""
+        table's layout) instead of running a second write job.
+        Partition directories of ``src_dir`` are flattened into the
+        version, so their keys (e.g. ``__month``) are not change
+        columns, as ``ManagedTable.read()`` drops them too.
+
+        The links go into a ``<table>.__tmp_<id>/_action=A`` staging
+        directory, which one ``os.rename`` publishes as
+        ``_version=N``, replacing any ``_version=N`` a crash left
+        behind; the meta write then commits it. O(files) metadata
+        work, zero bytes copied, shared write-once inodes (same trick
+        as CLONE TABLE)."""
         meta = self._read_meta()
-        new_version = meta["version"] + 1
-        dst = os.path.join(
-            self.log_path,
-            f"{VERSION_COL}={new_version}",
-            f"{ACTION_COL}={action}",
-        )
-        os.makedirs(dst, exist_ok=True)
+        stage = f"{self.table_path}.__tmp_{uuid.uuid4().hex[:8]}"
+        dst = os.path.join(stage, f"{ACTION_COL}={action}")
+        os.makedirs(dst)
         for path in data_files(src_dir):
             # partitionBy writes one part name into many partition
             # directories: the directory makes the link name unique
@@ -137,13 +127,17 @@ class Changelog:
             if part:
                 f = f"{f[: -len('.parquet')]}.{part.replace(os.sep, '.')}.parquet"
             os.link(path, os.path.join(dst, f))
-        return self._add_version(meta, dst, at)
+        version_dir = os.path.join(self.log_path, f"{VERSION_COL}={meta['version'] + 1}")
+        shutil.rmtree(version_dir, ignore_errors=True)
+        os.makedirs(self.log_path, exist_ok=True)
+        os.rename(stage, version_dir)
+        return self._add_version(meta, version_dir, at)
 
     def _add_version(self, meta: dict, version_dir: str | None, at: str | None = None) -> int:
         """Commit the version after ``meta``'s: the row count of the
         files in ``version_dir`` (None: zero) and commit time ``at``."""
         v = meta["version"] = meta["version"] + 1
-        rows = _count_parquet_rows(version_dir) if version_dir else 0
+        rows = parquet_row_count(version_dir) if version_dir else 0
         meta.setdefault("rows", {})[str(v)] = rows
         if at is not None:
             meta.setdefault("times", {})[str(v)] = at
@@ -183,35 +177,29 @@ class Changelog:
         """Unconsumed change rows + the version to commit after applying.
 
         Partition pruning on _version keeps this proportional to the new
-        data, not the table's history.
+        data, not the table's history; a version above the meta's (a
+        commit that crashed before its meta write) is not read.
         """
         meta = self._read_meta()
         current = meta["version"]
         offset = meta["offsets"].get(consumer, 0)
         if not os.path.exists(self.log_path):
             return None, current
-        df = self.spark.read.parquet(self.log_path).filter(F.col(VERSION_COL) > offset)
+        df = self.spark.read.parquet(self.log_path).filter(
+            F.col(VERSION_COL).between(offset + 1, current)
+        )
         return df, current
 
     def stream_has_data(self, consumer: str) -> bool:
         """system$stream_has_data analog (customer-...sql:66): cheap
         check — metadata version compare + per-version row counts
-        recorded at commit time, so the common case answers WITHOUT a
-        Spark job (r16: the isEmpty probe cost one job per task-DAG
-        gate — 6 jobs per pipeline cycle). Versions missing a recorded
-        count (a changelog written before the counts existed) fall
-        back to the any-rows probe."""
+        recorded at commit time, so it answers WITHOUT a Spark job
+        (r16: the isEmpty probe cost one job per task-DAG gate — 6
+        jobs per pipeline cycle)."""
         meta = self._read_meta()
-        current = meta["version"]
-        offset = meta["offsets"].get(consumer, 0)
-        if current <= offset:
-            return False
         rows = meta.get("rows", {})
-        counts = [rows.get(str(v)) for v in range(offset + 1, current + 1)]
-        if all(c is not None for c in counts):
-            return any(c > 0 for c in counts)
-        df, _ = self.stream_read(consumer)
-        return df is not None and not df.isEmpty()
+        offset = meta["offsets"].get(consumer, 0)
+        return any(rows.get(str(v), 0) > 0 for v in range(offset + 1, meta["version"] + 1))
 
     def stream_commit(self, consumer: str, version: int) -> None:
         """Advance the consumer offset (the transactional half of T1 —

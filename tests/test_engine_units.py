@@ -119,28 +119,22 @@ def test_footer_walker_skips_hidden_and_underscore_files(spark, tmp_path):
     are."""
     import shutil
 
-    from end_to_end_etl_using_snowflake_spark.plans.tables import parquet_row_count
-    from end_to_end_etl_using_snowflake_spark.streaming.changelog import (
-        _count_parquet_rows,
-    )
-
     path = tmp_path / "t.parquet"
     spark.range(5).coalesce(1).write.parquet(str(path))
     t = dml.ParquetTable(spark, str(path))
-    before = (parquet_row_count(str(tmp_path), "t"), t.file_count(), t.column_max("id"))
+    before = (dml.parquet_row_count(str(path)), t.file_count(), t.column_max("id"))
     assert before == (5, 1, 4)
     spark.range(100, 107).coalesce(1).write.parquet(str(tmp_path / "big"))
     (big,) = [f for f in os.listdir(tmp_path / "big") if f.endswith(".parquet")]
     for name in ("_x.parquet", ".x.parquet"):
         shutil.copy(tmp_path / "big" / big, path / name)
     assert spark.read.parquet(str(path)).count() == 5
-    assert (parquet_row_count(str(tmp_path), "t"), t.file_count(), t.column_max("id")) == before
-    assert _count_parquet_rows(str(path)) == 5
+    assert (dml.parquet_row_count(str(path)), t.file_count(), t.column_max("id")) == before
 
     log = Changelog(spark, str(tmp_path / "linked"))
     v = log.record_linked(str(path), "INSERT")
     assert log._read_meta()["rows"][str(v)] == 5
-    assert _count_parquet_rows(log.log_path) == 5
+    assert dml.parquet_row_count(log.log_path) == 5
     assert log.stream_read("c")[0].count() == 5
 
 
@@ -254,6 +248,52 @@ def test_changelog_truncate_bump(spark, tmp_path):
     log.stream_commit("c", log.version)
     log.bump()  # truncate: version moves, no rows
     assert not log.stream_has_data("c")
+
+
+@pytest.mark.parametrize("producer", ["record", "record_linked"])
+def test_crashed_version_does_not_leak_into_the_next(spark, tmp_path, producer):
+    """A commit that crashed after writing ``_version=2`` but before its
+    meta write leaves files behind. Readers skip them, and the next
+    commit's version 2 holds exactly its own rows and counts only
+    those."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    log = Changelog(spark, str(tmp_path / "t"))
+    log.record(_df(spark, [(1,)], "k int"), "INSERT")
+    stale = tmp_path / "t.__changelog" / "_version=2" / "_action=INSERT"
+    stale.mkdir(parents=True)
+    pq.write_table(pa.table({"k": pa.array([99], pa.int32())}), stale / "part-crashed.parquet")
+    assert [r.k for r in log.stream_read("c")[0].collect()] == [1]
+
+    new = _df(spark, [(2,)], "k int")
+    if producer == "record":
+        v = log.record(new, "INSERT")
+    else:
+        new.coalesce(1).write.parquet(str(tmp_path / "written"))
+        v = log.record_linked(str(tmp_path / "written"), "INSERT")
+    assert v == 2
+    assert log._read_meta()["rows"]["2"] == 1
+    batch, _ = log.stream_read("c")
+    assert sorted((r.k, r._version) for r in batch.collect()) == [(1, 1), (2, 2)]
+    assert not [s for s in os.listdir(tmp_path) if "__tmp_" in s]
+
+
+def test_record_of_a_stream_batch_takes_the_new_version(spark, tmp_path):
+    """A batch read from a stream carries ``_version``/``_action``;
+    recording it (the SQL replays' ``changes=batch``) stamps the new
+    version and action instead."""
+    src = Changelog(spark, str(tmp_path / "src"))
+    src.record(_df(spark, [(1,), (2,)], "k int"), "INSERT")
+    batch, _ = src.stream_read("c")
+    log = Changelog(spark, str(tmp_path / "dst"))
+    log.record(_df(spark, [(0,)], "k int"), "INSERT")
+    assert log.record(batch, "UPSERT") == 2
+    rows, _ = log.stream_read("c")
+    assert sorted(rows.columns) == ["_action", "_version", "k"]
+    assert sorted((r.k, r._version, r._action) for r in rows.collect()) == [
+        (0, 1, "INSERT"), (1, 2, "UPSERT"), (2, 2, "UPSERT"),
+    ]
 
 
 def test_pipe_streaming_mode(spark, tmp_path):

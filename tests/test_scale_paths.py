@@ -774,14 +774,12 @@ def test_parquet_row_count_matches_spark_count(spark):
     from end_to_end_etl_using_snowflake_spark.operators.dedup import (
         embedding_cosine_pairs_lsh_adaptive,
     )
-    from end_to_end_etl_using_snowflake_spark.plans.tables import (
-        load,
-        parquet_row_count,
-    )
+    from end_to_end_etl_using_snowflake_spark.operators.dml import parquet_row_count
+    from end_to_end_etl_using_snowflake_spark.plans.tables import load
 
     sf_dir = "/root/testdata/sf0.001"
     emb = load(spark, sf_dir, "embeddings")
-    n_footer = parquet_row_count(sf_dir, "embeddings")
+    n_footer = parquet_row_count(f"{sf_dir}/embeddings.parquet")
     assert n_footer == emb.count()
 
     def pairs(n_rows):

@@ -7,8 +7,13 @@ cycle 0 and then ``--cycles`` cycles (one generated batch plus one
 the start of its ``run_all()``, read from the engine's own task history
 (``dags[e].history``). A SKIPPED or SUSPENDED task has no end.
 
+``--jobs`` also prints each cycle's Spark jobs and completed tasks per
+task run and pipe refresh, grouped by the job descriptions the engine
+sets (``task <dag>.<task>``, ``pipe <name> ingest``) and read from the
+JVM status store, which is populated with the UI off.
+
 Usage:
-    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR]
+    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR] [--jobs]
 
 Measurement-only tooling: never imported by the engine or bench.
 """
@@ -54,11 +59,39 @@ def timeline(etl: EntityPipelines) -> tuple[float, list[tuple[float, float | Non
     return wall, sorted(rows, key=lambda row: row[0])
 
 
+def job_census(sc, after: int) -> dict[str, list[int]]:
+    """{description: [jobs, completed tasks]} of the Spark jobs with ids
+    above ``after``. Listener events arrive after an action returns, so
+    this polls until no such job runs and two reads agree."""
+    store = sc._jsc.sc().statusStore()
+    prev, deadline = None, time.monotonic() + 10
+    while True:
+        listed = store.jobsList(None)
+        jobs = sorted(
+            (j.jobId(), j.status().toString(), j)
+            for j in map(listed.apply, range(listed.size()))
+            if j.jobId() > after
+        )
+        seen = [(i, st) for i, st, _ in jobs]
+        if (seen == prev and "RUNNING" not in {st for _, st in seen}) or time.monotonic() > deadline:
+            break
+        prev = seen
+        time.sleep(0.1)
+    out: dict[str, list[int]] = {}
+    for _, _, j in jobs:
+        d = j.description()
+        counts = out.setdefault(d.get() if d.isDefined() else "(no description)", [0, 0])
+        counts[0] += 1
+        counts[1] += j.numCompletedTasks()
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cycles", type=int, default=3)
     ap.add_argument("--work", default=None, help="scratch directory (default: a temp dir)")
+    ap.add_argument("--jobs", action="store_true", help="print Spark jobs and tasks per task")
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="task_timeline_", dir=args.work)
@@ -72,11 +105,19 @@ def main() -> None:
         for cycle in range(args.cycles + 1):
             if cycle:
                 gen.write_batch(ds, cycle, landing)
+            tracker = spark.sparkContext.statusTracker()
+            last_job = max(tracker.getJobIdsForGroup(None), default=-1)
             wall, rows = timeline(etl)
             print(f"cycle {cycle}: run_all {wall:.2f} s")
             for start, end, name, state in rows:
                 span = f"{start:6.2f} -> {end:6.2f}" if end is not None else f"{start:6.2f}          "
                 print(f"  {span}  {name:34s} {state}")
+            if args.jobs:
+                census = job_census(spark.sparkContext, last_job)
+                jobs, tasks = (sum(c[i] for c in census.values()) for i in (0, 1))
+                print(f"  jobs tasks  description  (cycle: {jobs} jobs, {tasks} tasks)")
+                for desc, (n_jobs, n_tasks) in sorted(census.items()):
+                    print(f"  {n_jobs:4d} {n_tasks:5d}  {desc}")
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
