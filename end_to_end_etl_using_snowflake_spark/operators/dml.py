@@ -10,29 +10,33 @@ one Spark write. Every commit writes its rows once, in the table's
 layout, to a fresh ``<table>.__tmp_<uuid>``; nothing there is visible
 until a rename publishes it:
 
-- overwrite: the live table (or, per partition of the temp, the live
-  partition) renames into ``<table>.__old_<uuid>`` (``__parts_<uuid>``)
-  and the temp's in;
-- append: the temp's part files move into the table (``add_tmp``);
+- table commit (``ParquetTable.publish``): the live data files the
+  commit keeps are hard-linked into the temp (an append keeps every
+  file, a partition overwrite the partitions the temp does not write,
+  an overwrite or truncate nothing); then the live table renames into
+  ``<table>.__old_<uuid>`` and the temp's in. A published table
+  directory is never modified in place;
 - transaction: the temp renames to ``<table>.__txn_<id>`` and the
   intent marker publishes it (``MultiTableTransaction``);
 - changelog version: the temp's files are hard-linked into a staging
   directory that renames to ``_version=N`` (``Changelog.record_linked``).
 
 A crash before the publish leaves only a temp no reader lists; a
-crash between two renames leaves the table or one partition missing,
-and opening the table rolls that back and removes the temps
-(``ParquetTable``). Re-running a failed step is safe because every
-post-state computation here is idempotent for the same inputs (MERGE
-included — see operators.merge).
+crash between the two renames leaves the table missing. Opening the
+table (``ParquetTable``) puts the newest ``__old_`` back in that case
+and removes every other ``__old_`` and ``__tmp_`` sibling, so it reads
+exactly its state before or after the commit. Re-running a failed step
+is safe because every post-state computation here is idempotent for
+the same inputs (MERGE included — see operators.merge).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
-from collections.abc import Iterator, Mapping, Sequence
+from collections.abc import Iterable, Iterator, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -216,36 +220,29 @@ class ParquetTable:
         self._recover_swap()
 
     def _recover_swap(self) -> None:
-        """Roll back a publish interrupted between two renames: a
-        missing table directory gets its newest ``__old_`` sibling back,
-        and a missing partition its copy in a ``__parts_`` sibling
-        (partitions already published stay). Stray temps and holding
-        directories are then removed, so ``exists()`` never reports a
-        committed table as missing after a crash."""
+        """Roll back a publish interrupted between its two renames: a
+        missing table directory gets its newest ``__old_`` sibling back.
+        Every other ``__old_`` and ``__tmp_`` sibling (a crashed write,
+        change version or meta write, or an old copy not yet removed)
+        is then removed, so the table reads exactly its committed
+        state after a crash."""
         parent, name = os.path.split(self.path)
         if not os.path.isdir(parent):
             return
-        siblings = os.listdir(parent)
-
-        def named(tag: str) -> list[str]:
-            return [
-                os.path.join(parent, s)
-                for s in siblings
-                if s.startswith(f"{name}.{tag}")
-            ]
-
-        olds = sorted(named("__old_"), key=lambda p: os.stat(p).st_ctime)
-        held = named("__parts_")
+        strays = [
+            os.path.join(parent, s)
+            for s in os.listdir(parent)
+            if s.startswith((f"{name}.__old_", f"{name}.__tmp_"))
+        ]
+        olds = sorted((p for p in strays if ".__old_" in p), key=lambda p: os.stat(p).st_ctime)
         if olds and not self.exists():
-            os.rename(olds.pop(), self.path)
-        elif not held:
-            return
-        for hold in held:
-            for part in os.listdir(hold):
-                if not os.path.exists(os.path.join(self.path, part)):
-                    os.rename(os.path.join(hold, part), os.path.join(self.path, part))
-        for p in olds + held + named("__tmp_"):
-            shutil.rmtree(p, ignore_errors=True)
+            os.rename(olds[-1], self.path)
+            strays.remove(olds[-1])
+        for p in strays:
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.remove(p)
 
     def exists(self) -> bool:
         return os.path.exists(self.path)
@@ -254,7 +251,7 @@ class ParquetTable:
         return self.spark.read.parquet(self.path)
 
     def append(self, df: DataFrame) -> None:
-        self.add_tmp(self.write_tmp(df))
+        self.publish(self.write_tmp(df), self.files())
 
     def overwrite(self, df: DataFrame, sidecar: Mapping[str, str] | None = None) -> None:
         """Atomic full overwrite via write-temp-then-swap. Safe even when
@@ -266,14 +263,13 @@ class ParquetTable:
         the same atomic rename (e.g. DynamicTable's ``_applied_version``
         stamp). Names must start with ``_`` — Spark and parquet globs
         ignore underscore-prefixed files."""
-        self.swap_tmp(self.write_tmp(df, sidecar))
+        self.publish(self.write_tmp(df, sidecar))
 
     def write_tmp(self, df: DataFrame, sidecar: Mapping[str, str] | None = None) -> str:
         """The write half of every commit: materialize ``df`` once, in
         the table's layout, into a temp directory next to the table and
         return its path. A caller can hard-link the freshly written
-        files into a changelog version before publishing them
-        (``swap_tmp`` or ``swap_partitions``)."""
+        files into a changelog version before ``publish``."""
         tmp = f"{self.path}.__tmp_{uuid.uuid4().hex[:8]}"
         write_parquet(df, tmp, self.partition_by)
         for name, content in (sidecar or {}).items():
@@ -283,50 +279,45 @@ class ParquetTable:
                 fh.write(content)
         return tmp
 
-    def swap_tmp(self, tmp: str) -> None:
-        """The commit half of ``overwrite`` and ``truncate``: move the
-        live directory aside, rename the temp directory in, delete the
-        old one. A crash between the two renames is rolled back the
-        next time the table is opened (``_recover_swap``)."""
+    def files(self) -> list[str]:
+        """The data files an append keeps, relative to the table."""
+        return [os.path.relpath(p, self.path) for p in data_files(self.path)]
+
+    def partitions(self) -> list[str]:
+        """The partition directories, relative to the table, that a
+        partition overwrite keeps unless its temp writes them."""
+        if not self.partition_by:
+            return []
+        levels = [f"{c}=*" for c in self.partition_by]
+        found = glob.glob(os.path.join(glob.escape(self.path), *levels))
+        return [os.path.relpath(p, self.path) for p in found]
+
+    def publish(self, tmp: str, keep: Iterable[str] = ()) -> None:
+        """The commit half of every table write: hard-link each live
+        path of ``keep`` (relative to the table) that ``tmp`` lacks into
+        ``tmp`` — zero bytes copied, no kept file rewritten — then swap
+        the complete ``tmp`` in with two renames. Opening the table
+        rolls back a crash between them (``_recover_swap``)."""
+        for rel in keep:
+            src, dst = os.path.join(self.path, rel), os.path.join(tmp, rel)
+            if os.path.lexists(dst):
+                continue
+            if os.path.isdir(src):
+                hardlink_tree(src, dst)
+            else:
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.link(src, dst)
         _swap(self.path, tmp, f"{self.path}.__old_{uuid.uuid4().hex[:8]}")
-
-    def swap_partitions(self, tmp: str) -> None:
-        """The commit half of ``overwrite_partitions``: swap each
-        partition directory of ``tmp`` in for the table's; the others
-        are untouched. An unpartitioned table is one partition, and a
-        missing one has none to keep: both are swapped whole."""
-        if not (self.partition_by and self.exists()):
-            self.swap_tmp(tmp)
-            return
-        hold = f"{self.path}.__parts_{uuid.uuid4().hex[:8]}"
-        os.makedirs(hold)
-        for part in os.listdir(tmp):
-            if not _hidden(part):  # skips _SUCCESS and checksums
-                live = os.path.join(self.path, part)
-                _swap(live, os.path.join(tmp, part), os.path.join(hold, part))
-        shutil.rmtree(hold)
-        shutil.rmtree(tmp)
-
-    def add_tmp(self, tmp: str) -> None:
-        """The commit half of an append to an unpartitioned table: move
-        the part files of ``tmp`` in (part names are unique per write).
-        A partitioned table refuses, and ``tmp`` is removed."""
-        if self.partition_by:
-            shutil.rmtree(tmp)
-            raise ValueError(f"append to a partitioned table: {self.path}")
-        os.makedirs(self.path, exist_ok=True)
-        for path in data_files(tmp):
-            os.rename(path, os.path.join(self.path, os.path.basename(path)))
-        shutil.rmtree(tmp)
 
     def overwrite_partitions(self, df: DataFrame) -> None:
         """Replace only the partitions present in ``df`` (the
-        O(touched partitions) fact maintenance path): one write to a
-        temp directory, then ``swap_partitions``."""
-        self.swap_partitions(self.write_tmp(df))
+        O(touched partitions) fact maintenance path); the other
+        partitions are kept. An unpartitioned table is one partition,
+        so it is replaced whole."""
+        self.publish(self.write_tmp(df), self.partitions())
 
-    def truncate(self, schema) -> None:
-        """TRUNCATE is a metadata operation, not a job: swap in an
+    def truncate(self) -> None:
+        """TRUNCATE is a metadata operation, not a job: publish an
         empty directory with the same atomic rename discipline as
         ``overwrite``. Readers handle a file-less table directory
         (ManagedTable.read supplies the schema explicitly), so there
@@ -334,20 +325,21 @@ class ParquetTable:
         job here cost ~0.5 s per pipeline cycle for no work."""
         tmp = f"{self.path}.__tmp_{uuid.uuid4().hex[:8]}"
         os.makedirs(tmp)
-        self.swap_tmp(tmp)
+        self.publish(tmp)
 
     def clone_to(self, path: str) -> "ParquetTable":
         """Zero-copy ``CREATE TABLE ... CLONE`` (the Snowflake
         metadata-clone semantic): hardlink every data file into the
         new table directory — O(files) metadata operations, ZERO bytes
         copied, instant at any table size. Correct because this
-        engine's files are write-once: ``overwrite``/``truncate`` swap
-        in a whole new directory (shared inodes survive the old dir's
-        rmtree via their link count) and ``append`` only ADDS files to
-        one table's directory — so after cloning, either side may be
-        overwritten, truncated, or appended to without the other
-        observing it. At 100 TB this is the difference between an
-        instant dev/test/backup branch and a full-table copy job."""
+        engine's files are write-once and its table directories are
+        never modified in place: every commit publishes a complete new
+        directory (``publish``), hard-linking the files it keeps, and
+        shared inodes survive the old directory's rmtree via their link
+        count — so after cloning, either side may be overwritten,
+        truncated, or appended to without the other observing it. At
+        100 TB this is the difference between an instant
+        dev/test/backup branch and a full-table copy job."""
         if os.path.exists(path):
             raise ValueError(f"clone target already exists: {path}")
         if not self.exists():

@@ -13,7 +13,7 @@ introspection surface (customer-...sql:205-207).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,6 +82,8 @@ class ManagedTable:
         and listing the touched day/month directories. Values absent on
         disk are skipped (a batch can carry brand-new partitions)."""
         (pcol,) = self.storage.partition_by
+        # Spark writes a NULL (or empty) value to its default partition
+        values = ["__HIVE_DEFAULT_PARTITION__" if v in (None, "") else v for v in values]
         # Spark percent-escapes special chars in partition dir names;
         # this path-level lookup only supports values that need no
         # escaping (true for the __month 'YYYY-MM' keys). Fail loudly
@@ -101,20 +103,21 @@ class ManagedTable:
         return self.spark.read.schema(self.schema).parquet(*dirs)
 
     def _commit(
-        self, df: DataFrame, changes: DataFrame | None, action: str, publish: Callable[[str], None]
+        self, df: DataFrame, changes: DataFrame | None, action: str, keep: Sequence[str] = ()
     ) -> int:
         """The one commit behind every mutation: write ``df`` once, in
         the table's layout, to a temp directory and record the change
         version — by hard-linking those files when ``changes`` is None
         (the change rows are the rows written), else by writing
-        ``changes``, e.g. a MERGE's applied batch; then ``publish``.
-        Both plans run before the publish, so ``df`` may read this
-        table. Every step publishes by rename (``operators.dml``). A
-        crash before the version's meta write leaves a temp or an
-        unread ``_version`` directory, which the next commit replaces;
-        a crash after it, before the publish, leaves change rows the
-        table lacks, and callers re-run the step (COPY re-loads
-        unmarked files, merges are idempotent per key)."""
+        ``changes``, e.g. a MERGE's applied batch; then publish the
+        temp with the live paths ``keep`` linked in, after the version
+        (``ParquetTable.publish``). Both plans run before the publish,
+        so ``df`` may read this table. A crash before the version's
+        meta write leaves temps, which reopening the table removes, and
+        maybe an unread ``_version`` the next commit replaces; a crash
+        after it, before the publish's last rename, leaves change
+        rows the table lacks, and callers re-run the step (COPY
+        re-loads unmarked files, merges are idempotent per key)."""
         # a given batch is written first: it is the cached source of
         # df's plan, and a filled cache saves that plan a Spark job
         if changes is not None:
@@ -122,37 +125,37 @@ class ManagedTable:
         tmp = self.storage.write_tmp(df)
         if changes is None:
             version = self.changelog.record_linked(tmp, action)
-        publish(tmp)
+        self.storage.publish(tmp, keep)
         return version
 
     def append(self, df: DataFrame, action: str = "INSERT") -> int:
         """INSERT INTO: the written rows are the change rows, and the
-        part files move into the table (``add_tmp``). Unpartitioned
-        tables only, refused before anything is written: no caller
-        appends to a partitioned one."""
+        new table keeps every live file. Unpartitioned tables only,
+        refused before anything is written: no caller appends to a
+        partitioned one."""
         if self.storage.partition_by:
             raise ValueError(f"append to a partitioned table: {self.path}")
-        return self._commit(df, None, action, self.storage.add_tmp)
+        return self._commit(df, None, action, self.storage.files())
 
     def overwrite(self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT") -> int:
         """Atomic replace of the whole table by ``df``. ``changes``
         (default: the rows written) is what lands in the changelog."""
-        return self._commit(df, changes, action, self.storage.swap_tmp)
+        return self._commit(df, changes, action)
 
     def overwrite_partitions(
         self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT"
     ) -> int:
         """Partition-scoped replace (the partition-pruned MERGE commit):
-        only the partitions present in ``df`` are rewritten, and a
-        missing table is created. An unpartitioned table is one
-        partition, so it is replaced whole, as ``overwrite`` does.
-        ``changes`` as in ``overwrite``, so stream consumers do not
-        depend on which commit a producer used."""
-        return self._commit(df, changes, action, self.storage.swap_partitions)
+        only the partitions present in ``df`` are rewritten, the others
+        are kept, and a missing table is created. An unpartitioned
+        table is one partition, so it is replaced whole, as
+        ``overwrite`` does. ``changes`` as in ``overwrite``, so stream
+        consumers do not depend on which commit a producer used."""
+        return self._commit(df, changes, action, self.storage.partitions())
 
     def truncate(self) -> int:
         """M5 TRUNCATE (customer-...sql:172)."""
-        self.storage.truncate(self.schema)
+        self.storage.truncate()
         return self.changelog.bump()
 
 

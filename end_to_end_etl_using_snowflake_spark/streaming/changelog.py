@@ -64,7 +64,9 @@ class Changelog:
             return json.load(f)
 
     def _write_meta(self, meta: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.meta_path) or ".")
+        # a __tmp_ sibling of the table, which reopening it removes
+        parent, name = os.path.split(self.table_path)
+        fd, tmp = tempfile.mkstemp(prefix=f"{name}.__tmp_", dir=parent or ".")
         with os.fdopen(fd, "w") as f:
             json.dump(meta, f)
         os.replace(tmp, self.meta_path)  # atomic

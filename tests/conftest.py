@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -19,3 +20,36 @@ def spark(tmp_path_factory):
     spark = get_spark(warehouse_dir=warehouse)
     bootstrap_catalog(spark)
     yield spark
+
+
+class InjectedCrash(RuntimeError):
+    """The failure ``crash_at_rename`` injects in place of a rename."""
+
+
+@pytest.fixture
+def crash_at_rename():
+    """``with crash_at_rename(n): ...`` makes the n-th ``os.rename`` or
+    ``os.replace`` call inside the block raise ``InjectedCrash`` instead
+    of renaming, as a process killed at that step would leave the
+    files; the calls before it rename as usual."""
+
+    @contextlib.contextmanager
+    def arm(n: int):
+        calls = 0
+
+        def fail_nth(real):
+            def call(*args, **kwargs):
+                nonlocal calls
+                calls += 1
+                if calls == n:
+                    raise InjectedCrash(f"injected crash at rename {n}")
+                return real(*args, **kwargs)
+
+            return call
+
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(os, "rename", fail_nth(os.rename))
+            m.setattr(os, "replace", fail_nth(os.replace))
+            yield
+
+    return arm

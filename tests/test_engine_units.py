@@ -805,7 +805,7 @@ def test_zero_copy_clone_isolation(spark, tmp_path):
     t.overwrite(spark.range(2).selectExpr("id AS k"))
     assert t.read().count() == 2 and c.read().count() == 15
     # truncate the CLONE: base unaffected
-    c.truncate(None)
+    c.truncate()
     assert t.read().count() == 2
     # error paths: existing target / missing source
     import pytest as _pytest

@@ -72,18 +72,19 @@ def test_overwrite_partitions_touches_only_carried_partitions(spark, tmp_path):
     base = spark.createDataFrame([("a1", 1), ("b1", 2), ("c1", 3)], schema)
     tbl.overwrite(_with_m(base), changes=base)
     # replace partition 'b' only; 'a' and 'c' files must be untouched
-    mtimes_before = {
-        p: os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
-        for p in "ac"
-    }
+    # (the same inodes, never rewritten, in a newly published directory)
+    def files(p):
+        pdir = os.path.join(tbl.storage.path, f"__m={p}")
+        return {(os.stat(f).st_ino, os.stat(f).st_mtime_ns) for f in data_files(pdir)}
+
+    before = {p: files(p) for p in "ac"}
     delta = spark.createDataFrame([("b1", 20), ("b2", 21)], schema)
     version = tbl.overwrite_partitions(_with_m(delta), changes=delta)
     assert version > 0  # changelog advanced (stream consumers see it)
     got = sorted((r.k, r.v) for r in tbl.read().collect())
     assert got == [("a1", 1), ("b1", 20), ("b2", 21), ("c1", 3)]
-    for p, before in mtimes_before.items():
-        after = os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
-        assert after == before, f"partition {p} was rewritten"
+    for p, kept in before.items():
+        assert kept and files(p) == kept, f"partition {p} was rewritten"
 
 
 def _generated(spark, schema, parts: str, n: int, v: int = 0):
@@ -92,10 +93,10 @@ def _generated(spark, schema, parts: str, n: int, v: int = 0):
 
 
 def test_interrupted_partition_publish_rolls_back_on_reopen(spark, tmp_path, monkeypatch):
-    """A crash between the two renames of one partition leaves that
-    partition missing from the table and held in a ``__parts_`` sibling.
-    Reopening the table puts it back and leaves the other partitions
-    alone; re-running the commit then lands the whole batch."""
+    """A crash between the two renames of the publish leaves the table
+    missing and its old directory in an ``__old_`` sibling. Reopening
+    the table puts it back, untouched and without the batch's new
+    partition; re-running the commit then lands the whole batch."""
     tbl, schema = _table(spark, tmp_path)
     base = _generated(spark, schema, "abcd", 5)
     tbl.overwrite(_with_m(base))
@@ -108,19 +109,20 @@ def test_interrupted_partition_publish_rolls_back_on_reopen(spark, tmp_path, mon
     rename = os.rename
 
     def crash_between_renames(src, dst):
-        if dst == os.path.join(tbl.storage.path, "__m=b") and "__tmp_" in str(src):
-            raise RuntimeError("injected crash between a partition's renames")
+        if dst == tbl.storage.path and "__tmp_" in str(src):
+            raise RuntimeError("injected crash between the publish's renames")
         rename(src, dst)
 
     monkeypatch.setattr(os, "rename", crash_between_renames)
     with pytest.raises(RuntimeError, match="injected crash"):
         tbl.overwrite_partitions(_with_m(delta))
     monkeypatch.undo()
-    assert not os.path.exists(os.path.join(tbl.storage.path, "__m=b"))
+    assert not os.path.exists(tbl.storage.path)
 
     tbl, _ = _table(spark, tmp_path)  # reopen
-    got = {(r.k, r.v) for r in tbl.read().collect() if not r.k.startswith("e")}
+    got = {(r.k, r.v) for r in tbl.read().collect()}
     assert got == {(r.k, r.v) for r in base.collect()}
+    assert not os.path.exists(os.path.join(tbl.storage.path, "__m=e"))
     for p, before in mtimes.items():
         after = os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
         assert after == before, f"partition {p} was touched"

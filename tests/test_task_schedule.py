@@ -271,3 +271,24 @@ def test_incremental_order_commits_link_their_change_versions(pipeline):
     assert sorted(map(tuple, rows.collect())) == sorted(map(tuple, march.collect()))
     assert march.count() == 3 and fact.read().count() == 4
     assert linked == _inodes(os.path.join(fact.storage.path, "__month=2021-03"))
+
+
+def test_null_partition_value_keeps_its_rows_across_batches(pipeline):
+    """An order with a NULL ``order_date`` lands in Spark's default
+    ``__month`` partition. A later batch carrying another NULL-date
+    order must merge into that partition, not replace it."""
+    landing, make = pipeline
+    null_date = lambda cust: ("\\N", *_order(1, cust, 0)[1:])  # noqa: E731
+    _write(landing, "order", "o_null1", [null_date(0)])
+    p = make("incremental")
+    assert _all_succeeded(p.run_all())
+
+    _write(landing, "order", "o_null2", [null_date(1)])
+    assert _all_succeeded(p.run_all(), ("order",))
+    raw = p.raw["order"].read()
+    assert sorted(r.customer_id for r in raw.filter("order_date IS NULL").collect()) == ["C0", "C1"]
+    assert raw.count() == 4
+    assert {k: v for k, v in _fact(p).items() if k[2] == "None"} == {
+        ("C0", "I0", "None"): 1,
+        ("C1", "I0", "None"): 1,
+    }

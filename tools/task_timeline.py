@@ -12,8 +12,12 @@ task run and pipe refresh, grouped by the job descriptions the engine
 sets (``task <dag>.<task>``, ``pipe <name> ingest``) and read from the
 JVM status store, which is populated with the UI off.
 
+``--files`` also prints, after each cycle, every table's data files and
+partition directories and the number of ``<table>.__tmp_*`` /
+``<table>.__old_*`` siblings left beside it (0 unless a commit crashed).
+
 Usage:
-    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR] [--jobs]
+    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR] [--jobs] [--files]
 
 Measurement-only tooling: never imported by the engine or bench.
 """
@@ -86,12 +90,24 @@ def job_census(sc, after: int) -> dict[str, list[int]]:
     return out
 
 
+def file_census(wh: Warehouse) -> list[tuple[str, int, int, int]]:
+    """(schema.table, data files, partitions, stray temp and old
+    siblings) of every table of ``wh``."""
+    out = []
+    for (schema, name), t in sorted(wh._tables.items()):
+        strays = [s for s in os.listdir(os.path.dirname(t.path))
+                  if s.startswith((f"{name}.__tmp_", f"{name}.__old_"))]
+        out.append((f"{schema}.{name}", len(t.storage.files()), len(t.storage.partitions()), len(strays)))
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cycles", type=int, default=3)
     ap.add_argument("--work", default=None, help="scratch directory (default: a temp dir)")
     ap.add_argument("--jobs", action="store_true", help="print Spark jobs and tasks per task")
+    ap.add_argument("--files", action="store_true", help="print data files and partitions per table")
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="task_timeline_", dir=args.work)
@@ -118,6 +134,10 @@ def main() -> None:
                 print(f"  jobs tasks  description  (cycle: {jobs} jobs, {tasks} tasks)")
                 for desc, (n_jobs, n_tasks) in sorted(census.items()):
                     print(f"  {n_jobs:4d} {n_tasks:5d}  {desc}")
+            if args.files:
+                print("  files parts strays  table")
+                for table, files, parts, strays in file_census(wh):
+                    print(f"  {files:5d} {parts:5d} {strays:6d}  {table}")
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
