@@ -208,9 +208,12 @@ class ParquetTable:
 
     ``overwrite`` implements M3 INSERT OVERWRITE (order-...sql:179) and
     the swap step of MERGE; ``append`` implements M4 INSERT INTO
-    (order-...sql:306-339). ``partition_by`` turns overwrites into
-    partition-level rewrites — at 100 TB the fact table partitions by
-    order_date so a daily rebuild touches one partition, not the table.
+    (order-...sql:306-339). ``partition_by`` names the partition
+    columns of the rows written — ``ManagedTable`` derives them from its
+    declared key — and ``overwrite_partitions`` turns a commit into a
+    partition-level rewrite: at 100 TB the fact partitions by order
+    month, so a daily batch rewrites the months it touches, not the
+    table.
     """
 
     def __init__(self, spark: SparkSession, path: str, partition_by: Sequence[str] = ()):

@@ -23,10 +23,11 @@ AQE broadcasts it and the target is never shuffled.
 Scale notes (100 TB target):
 
 - For a month-partitioned target, the merge reads and rewrites only
-  the partitions that contain source keys; untouched partitions are
-  never read or rewritten. The incremental pipeline's raw_order task
-  does this (``ManagedTable.read_partitions`` +
-  ``overwrite_partitions``); ``incremental_agg_merge`` is the additive
+  the partitions the source rows map to; untouched partitions are
+  never read or rewritten. The raw task does this on every table
+  (``ManagedTable.touched`` + ``read_partitions`` +
+  ``overwrite_partitions``; a flat table is one partition, read and
+  replaced whole); ``incremental_agg_merge`` is the additive
   fact variant (registry query m7). The rebuild-mode pipelines keep the
   reference's full rebuild (order-...sql:179).
 - The dedup window shuffles only the source batch, never the target.

@@ -18,9 +18,11 @@ The clock is injectable so ``current_timestamp()`` defaults
 (customer-...sql:42-43) are testable against golden outputs.
 
 Scale: dims merge via broadcast-anti-join (CDC batches are tiny);
-fact_order is INSERT OVERWRITE like the reference (order-...sql:179);
-in ``fact_mode="incremental"`` the order tasks ``overwrite_partitions``
-on a ``__month`` key, so a daily batch rewrites only touched months.
+fact_order is INSERT OVERWRITE like the reference (order-...sql:179).
+``fact_mode="incremental"`` declares raw_order and fact_order
+partitioned by order month; the order tasks are the same code in both
+postures, and on the partitioned tables read and rewrite only the
+months a batch touches.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from functools import partialmethod
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import merge as M
@@ -45,17 +47,6 @@ Clock = Callable[[], datetime]
 
 def _utc_now() -> datetime:
     return datetime.now(timezone.utc)
-
-
-def _month() -> Column:
-    """The raw_order ``__month`` partition key: a prefix of order_date."""
-    return F.substring("order_date", 1, 7)
-
-
-def _touched_months(batch: DataFrame) -> list[str]:
-    """The ``__month`` keys a change batch carries — O(distinct months)
-    driver-side, never row data."""
-    return [r[0] for r in batch.select(_month()).distinct().collect()]
 
 
 class EntityPipelines:
@@ -76,16 +67,19 @@ class EntityPipelines:
           fact from all of raw_order every cycle (order-...sql:179) —
           O(history) per cycle.
         - ``"incremental"`` (100 TB posture): raw_order AND fact are
-          partitioned by a derived ``__month`` key (a prefix of the
-          order_date business key, never in the logical schema); a
-          cycle partition-prunes the raw MERGE to the months the batch
+          partitioned by one ``__month`` key, the 'yyyy-MM' of
+          order_date as a date (NULL when it is no date); a cycle
+          partition-prunes the raw MERGE to the months the batch
           carries, recomputes ONLY those months of the fact, and
-          overwrites those partitions — O(touched partitions),
-          exact even when the batch *updates* an existing order (the
-          whole affected month is recomputed from raw, so no
-          delta-vs-old bookkeeping). Assumes dim key mappings are
-          stable (SCD-1 in-place updates — true here); a dim key
-          reassignment requires one full rebuild.
+          overwrites those partitions — O(touched partitions), exact
+          even when the batch *updates* an existing order (the whole
+          affected month is recomputed from raw, so no delta-vs-old
+          bookkeeping). Assumes dim key mappings are stable (SCD-1
+          in-place updates — true here); a dim key reassignment
+          requires one full rebuild.
+
+        This is the only place the mode is read: the order tasks take
+        their posture from the tables' declared partitioning.
         """
         if fact_mode not in ("rebuild", "incremental"):
             raise ValueError(f"unknown fact_mode {fact_mode!r}")
@@ -93,31 +87,23 @@ class EntityPipelines:
         self.wh = warehouse
         self.landing_root = landing_root
         self.clock = clock
-        self.fact_mode = fact_mode
+        # One key for both order tables: on raw's varchar it gives the
+        # month of the fact's date cast ('2021-3-7' -> '2021-03'), and
+        # NULL for '' or any other non-date. Month, not day: a month of
+        # orders is about one healthy partition at warehouse scale,
+        # while a partition per day at test scale degenerates to
+        # thousands of near-empty directories whose listing tax swamps
+        # the pruning win.
+        month = F.expr("date_format(try_cast(order_date AS DATE), 'yyyy-MM')")
+        by_month = {"__month": month} if fact_mode == "incremental" else None
 
         self.stage: dict[str, ManagedTable] = {}
         self.raw: dict[str, ManagedTable] = {}
         self.pipes: dict[str, Pipe] = {}
         for entity, schema in CF.STAGE_SCHEMAS.items():
             self.stage[entity] = warehouse.table("stg", f"stg_{entity}", schema)
-            # incremental posture: raw_order partitions on a derived
-            # __month key (prefix of order_date, part of its business
-            # key), enabling the partition-pruned MERGE in _raw_task —
-            # the Snowflake micro-partition-pruning analog. Month, not
-            # day: partition granularity is chosen by volume (a month
-            # of orders ≈ one healthy partition at warehouse scale; a
-            # partition-per-day layout at test SF degenerates to
-            # thousands of near-empty directories and the listing tax
-            # swamps the pruning win). __month never enters the logical
-            # schema — it exists only as a directory key (read()
-            # suppresses it via the explicit schema).
-            raw_parts = (
-                ("__month",)
-                if entity == "order" and fact_mode == "incremental"
-                else ()
-            )
             self.raw[entity] = warehouse.table(
-                "raw", f"raw_{entity}", schema, partition_by=raw_parts
+                "raw", f"raw_{entity}", schema, by_month if entity == "order" else None
             )
             self.pipes[entity] = Pipe(
                 spark,
@@ -129,12 +115,7 @@ class EntityPipelines:
         self.dim_customer = warehouse.table("transformed", "dim_customer", CF.DIM_CUSTOMER)
         self.dim_item = warehouse.table("transformed", "dim_item", CF.DIM_ITEM)
         self.dims = {"customer": self.dim_customer, "item": self.dim_item}
-        self.fact_order = warehouse.table(
-            "transformed",
-            "fact_order",
-            CF.FACT_ORDER,
-            partition_by=("__month",) if fact_mode == "incremental" else (),
-        )
+        self.fact_order = warehouse.table("transformed", "fact_order", CF.FACT_ORDER, by_month)
 
         self.dags = {
             "customer": self._build_dag("customer", self._dim_customer_task),
@@ -216,6 +197,11 @@ class EntityPipelines:
         (item-...sql:72-75); we apply latest-wins dedup on the
         changelog version for every entity — same semantics, and
         required for multi-file batches that touch one key twice.
+
+        The merge reads and rewrites only the partitions of raw the
+        batch maps to (all of a flat raw): the Snowflake
+        micro-partition pruning analog, O(touched partitions) per
+        cycle, not O(history).
         """
         stage = self.stage[entity]
         src, version = stage.changelog.stream_read("raw_tsk")
@@ -231,42 +217,24 @@ class EntityPipelines:
         order_cols = self.LATEST_FIRST[entity] + [
             c for c in sorted(raw.schema.names) if c not in keys
         ]
-        partitioned = bool(raw.storage.partition_by)
-        exists = raw.storage.exists()
         # an initial load's post-state IS the deduped batch: it is
         # written once and the changelog version hardlinks those files
         # (r16). Every other commit also records the batch itself, so
         # the one dedup pass is cached for both consumers.
-        link = not exists
+        link = not raw.storage.exists()
         deduped = M.dedup_latest(src.drop("_action"), keys, order_cols)
         if not link:
             deduped = deduped.persist()
         try:
-            if partitioned and exists:
-                # partition-pruned MERGE (the Snowflake micro-partition
-                # pruning analog): the __month partition key is a prefix
-                # of the business key's order_date, so a batch can only
-                # touch partitions it carries values for. Read ONLY
-                # those directories (path-pruned — the rest of the
-                # table is never listed; a root read lists every month
-                # directory, a Spark job past 32 of them), merge
-                # against that subset,
-                # and rewrite only those partitions. Per-cycle cost is
-                # O(touched partitions), not O(history) — the property
-                # that keeps a continuously-merged 100 TB raw table
-                # maintainable.
-                target = raw.read_partitions(_touched_months(deduped))
-            else:
-                target = raw.read()
+            # path-pruned: a root read would list every month
+            # directory, a Spark job past 32 of them
+            target = raw.read_partitions(raw.touched(deduped))
             out = M.merge_dataframes(
                 target,
                 deduped,
                 keys=keys,
                 update_cols=[c for c in raw.schema.names if c not in keys],
             ).select(*raw.schema.names)
-            if partitioned:
-                out = out.withColumn("__month", _month())
-            # the touched months of a partitioned raw; all of a flat one
             raw.overwrite_partitions(out, changes=None if link else deduped.drop("_version"))
         finally:
             if not link:
@@ -339,27 +307,20 @@ class EntityPipelines:
         star join raw_order x dim_customer x dim_item(end_date IS NULL),
         3-key group, count + 7 implicit-cast SUMs, ordered by order_date.
         Reads the raw TABLE (not the stream) — the stream only triggers
-        (order-...sql:176-177) and is consumed to reset it.
+        (order-...sql:176-177) and selects what is rebuilt.
 
-        In ``fact_mode="incremental"`` the batch's distinct months
-        restrict the recompute (path-pruned read of raw's __month
-        partitions) and only those fact partitions are rewritten —
-        same result, O(touched partitions)."""
-        raw = self.raw["order"]
+        The recompute unit is the partition: the batch's partitions of
+        raw (all of a flat raw) are read and rebuilt whole, exact even
+        when the batch updates existing orders, and the fact partitions
+        they map to are replaced. raw_order and fact_order share one
+        partition key, so those are the same values for both; a flat
+        fact is replaced whole."""
+        raw, fact = self.raw["order"], self.fact_order
         src, version = raw.changelog.stream_read("fact_tsk")
-        incremental = self.fact_mode == "incremental"
-        if not incremental:
-            ro = raw.read()
-        else:
-            if src is None:
-                return
-            # the recompute unit is the __month partition (the
-            # overwrite granularity): every month the batch touches is
-            # rebuilt whole from raw — exact even when the batch
-            # updates existing orders. Path-pruned read: only the
-            # touched month directories of raw are listed/scanned (a
-            # root read would list all of them: a Spark job past 32).
-            ro = raw.read_partitions(_touched_months(src))
+        if src is None:
+            return
+        touched = raw.touched(src)
+        ro = raw.read_partitions(touched)
         dc = self.dim_customer.read().select("customer_dim_key", "customer_id")
         di = (
             self.dim_item.read()
@@ -400,24 +361,17 @@ class EntityPipelines:
         # above the cache lets the optimizer reduce fill_identity to the
         # rank alone (no isNull split, no union)
         agg = agg.persist()
-        fact = self.fact_order
         try:
             rebuilt = M.fill_identity(
                 agg.withColumn("order_fact_key", F.lit(None).cast("long")),
                 "order_fact_key",
                 order_by=["order_date", "customer_dim_key", "item_dim_key"],
-                # a full rebuild numbers from 1; a delta cycle continues
-                # past the stored maximum, read before the overwrite
-                existing_max=fact.identity_max("order_fact_key") if incremental else 0,
+                # a full rebuild numbers from 1; a partition replace
+                # continues past the stored maximum, read before it
+                existing_max=fact.identity_max("order_fact_key", touched),
             )
-            out = rebuilt.select(*fact.schema.names)
-            if incremental:
-                # rewrite only the touched month partitions; the changelog
-                # links the rewritten groups (UPSERT granularity)
-                month = F.date_format(F.col("order_date"), "yyyy-MM")
-                fact.overwrite_partitions(out.withColumn("__month", month))
-            else:
-                fact.overwrite(out)
+            # the changelog links the rewritten groups (UPSERT granularity)
+            fact.overwrite_partitions(rebuilt.select(*fact.schema.names))
         finally:
             agg.unpersist()
         raw.changelog.stream_commit("fact_tsk", version)

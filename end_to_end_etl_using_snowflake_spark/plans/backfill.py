@@ -17,9 +17,9 @@ composite keys — replicated as a ranked CTE):
   whole (the reference's own INSERT OVERWRITE posture, M3).
 - ``pl_backfill_incremental``: the initial load stops two months short;
   the held-back orders land as a DELTA batch and a second cycle runs
-  with ``fact_mode="incremental"`` — only the touched order_date
-  partitions are recomputed and dynamic-partition-overwritten
-  (O(delta), operators/dml.py:overwrite_partitions). The oracle
+  with ``fact_mode="incremental"`` — only the touched order-month
+  partitions are recomputed and replaced (O(delta),
+  ``ManagedTable.overwrite_partitions``). The oracle
   computes the audit from ALL orders, so a green row IS the proof that
   the O(delta) cycle converges to the exact full-rebuild state — the
   reference's full-rebuild-per-cycle scale flaw, fixed and verified.
@@ -289,9 +289,9 @@ def prepare_incremental(spark: SparkSession, sf_dir: str) -> dict:
 
 def run_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Land the held-back order batch and run one maintenance cycle:
-    MERGE the delta into raw (O(history) anti-join but O(delta) data
-    movement), then recompute ONLY the touched order_date partitions
-    and dynamic-partition-overwrite them."""
+    MERGE the delta into the touched order-month partitions of raw,
+    then recompute ONLY those partitions of the fact and replace
+    them."""
     st = prepare_incremental(spark, sf_dir)
     order_landing = os.path.join(st["landing"], "order")
     for f in os.listdir(st["delta_dir"]):
@@ -405,9 +405,9 @@ def pl_backfill_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference lacks): the initial load stops at INCR_CUTOFF; the
     held-back two months of orders land as a delta batch and ONE
     maintenance cycle runs with fact_mode="incremental" — the raw MERGE
-    moves only delta rows, and only the ~60 touched order_date
-    partitions (of ~2400) are recomputed and dynamic-partition-
-    overwritten (operators/dml.py:overwrite_partitions). The oracle
+    reads and rewrites only the touched order-month partitions, and
+    only those partitions of the fact are recomputed and replaced
+    (``ManagedTable.overwrite_partitions``). The oracle
     computes the audit over ALL orders, so a green row is a proof of
     convergence: the O(delta) cycle ends in the exact state a full
     rebuild produces. bench.py times only the delta cycle (prepare is

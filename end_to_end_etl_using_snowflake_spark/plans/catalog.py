@@ -13,9 +13,9 @@ introspection surface (customer-...sql:205-207).
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,17 +26,24 @@ SCHEMAS = ("stg", "raw", "transformed")
 
 
 class ManagedTable:
+    """``partition_by`` declares the partition key once, as ``{name:
+    expression over the logical columns}`` (Iceberg's hidden
+    partitioning): ``_commit`` derives it, it exists only as
+    ``<name>=<value>`` directories, and callers pass and get back
+    logical rows only."""
+
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         schema: T.StructType,
-        partition_by: Sequence[str] = (),
+        partition_by: Mapping[str, Column] | None = None,
     ):
         self.spark = spark
         self.path = path
         self.schema = schema
-        self.storage = ParquetTable(spark, path, partition_by)
+        self.partition_by = dict(partition_by or {})
+        self.storage = ParquetTable(spark, path, list(self.partition_by))
         self.changelog = Changelog(spark, path)
 
     @property
@@ -52,50 +59,64 @@ class ManagedTable:
         # explicit schema: skips footer inference, keeps the declared
         # column order for partitioned layouts, and makes an empty
         # partitioned directory (a zero-row overwrite writes no files)
-        # readable. The trailing select drops derived partition-key
-        # columns (e.g. the incremental mode's __month): partition
-        # discovery on a root-directory read appends them even under a
-        # user schema — they are directory metadata, not table columns.
+        # readable. The trailing select drops the partition key:
+        # partition discovery on a root-directory read appends it even
+        # under a user schema.
         return (
             self.spark.read.schema(self.schema)
             .parquet(self.storage.path)
             .select(*[f.name for f in self.schema.fields])
         )
 
-    def identity_max(self, col: str) -> int:
+    def touched(self, batch: DataFrame) -> list | None:
+        """The partition-key values the rows of ``batch`` (logical
+        columns) map to: one Spark job, O(distinct values) on the
+        driver. None, with no job, for a flat or missing table: the
+        batch touches all of it."""
+        if not self.partition_by or not self.storage.exists():
+            return None
+        (key,) = self.partition_by.values()
+        return [r[0] for r in batch.select(key).distinct().collect()]
+
+    def identity_max(self, col: str, replaced: Sequence | None = ()) -> int:
         """Seed for an identity column: its stored maximum, 0 for a
-        missing or empty table. Read from the parquet footers
+        missing or empty table or for a commit that replaces all of it
+        (``replaced`` None, a flat table's ``touched``), so a rebuild
+        numbers from 1. A partition replace continues past every stored
+        key, the replaced partitions' included: one whose recompute
+        yields no rows is kept. Read from the parquet footers
         (``ParquetTable.column_max`` — driver metadata, no Spark job);
         when a row group lacks statistics it falls back to one scan."""
-        if not self.storage.exists():
+        if replaced is None or not self.storage.exists():
             return 0
         m = self.storage.column_max(col)
         if m is None:
             m = self.read().agg(F.max(col)).first()[0]
         return int(m) if m is not None else 0
 
-    def read_partitions(self, values: Sequence[str]) -> DataFrame:
-        """Path-pruned read: ONLY the listed partition-directory values
-        of the (single) partition column are opened — the physical form
-        of partition pruning the partition-pruned MERGE relies on. At
-        100 TB this is the difference between listing the whole table
-        and listing the touched day/month directories. Values absent on
-        disk are skipped (a batch can carry brand-new partitions)."""
+    def read_partitions(self, values: Sequence | None) -> DataFrame:
+        """Path-pruned read of the partitions of key ``values`` (None:
+        all of the table) — the physical partition pruning of the
+        partition-pruned MERGE: at 100 TB, listing the touched month
+        directories instead of the whole table. Values absent on disk
+        are skipped (a batch can carry brand-new partitions)."""
+        if values is None:
+            return self.read()
         (pcol,) = self.storage.partition_by
-        # Spark writes a NULL (or empty) value to its default partition
-        values = ["__HIVE_DEFAULT_PARTITION__" if v in (None, "") else v for v in values]
+        # Spark writes a NULL (or empty) value to its default partition;
+        # each directory is opened once
+        values = dict.fromkeys(
+            "__HIVE_DEFAULT_PARTITION__" if v in (None, "") else str(v) for v in values
+        )
         # Spark percent-escapes special chars in partition dir names;
         # this path-level lookup only supports values that need no
         # escaping (true for the __month 'YYYY-MM' keys). Fail loudly
         # rather than silently skipping an escaped directory.
-        unsafe = [v for v in values if any(c in "/\\:%#?{}[]" for c in str(v))]
+        unsafe = [v for v in values if any(c in "/\\:%#?{}[]" for c in v)]
         if unsafe:
             raise ValueError(f"non-path-safe partition values: {unsafe!r}")
-        dirs = [
-            os.path.join(self.storage.path, f"{pcol}={v}")
-            for v in values
-            if os.path.exists(os.path.join(self.storage.path, f"{pcol}={v}"))
-        ]
+        dirs = [os.path.join(self.storage.path, f"{pcol}={v}") for v in values]
+        dirs = [d for d in dirs if os.path.exists(d)]
         if not dirs:
             # brand-new partitions: the same empty LocalRelation as a
             # missing table, so the MERGE against them loses its joins
@@ -105,8 +126,9 @@ class ManagedTable:
     def _commit(
         self, df: DataFrame, changes: DataFrame | None, action: str, keep: Sequence[str] = ()
     ) -> int:
-        """The one commit behind every mutation: write ``df`` once, in
-        the table's layout, to a temp directory and record the change
+        """The one commit behind every mutation: write ``df`` (logical
+        rows) once, with the partition key derived from them, in the
+        table's layout, to a temp directory and record the change
         version — by hard-linking those files when ``changes`` is None
         (the change rows are the rows written), else by writing
         ``changes``, e.g. a MERGE's applied batch; then publish the
@@ -122,6 +144,8 @@ class ManagedTable:
         # df's plan, and a filled cache saves that plan a Spark job
         if changes is not None:
             version = self.changelog.record(changes, action)
+        if self.partition_by:
+            df = df.withColumns(self.partition_by)
         tmp = self.storage.write_tmp(df)
         if changes is None:
             version = self.changelog.record_linked(tmp, action)
@@ -146,8 +170,8 @@ class ManagedTable:
         self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT"
     ) -> int:
         """Partition-scoped replace (the partition-pruned MERGE commit):
-        only the partitions present in ``df`` are rewritten, the others
-        are kept, and a missing table is created. An unpartitioned
+        only the partitions the rows of ``df`` map to are rewritten, the
+        others are kept, and a missing table is created. An unpartitioned
         table is one partition, so it is replaced whole, as
         ``overwrite`` does. ``changes`` as in ``overwrite``, so stream
         consumers do not depend on which commit a producer used."""
@@ -174,7 +198,7 @@ class Warehouse:
         schema: str,
         name: str,
         struct: T.StructType,
-        partition_by: Sequence[str] = (),
+        partition_by: Mapping[str, Column] | None = None,
     ) -> ManagedTable:
         if schema not in SCHEMAS:
             raise KeyError(f"unknown schema {schema!r}")

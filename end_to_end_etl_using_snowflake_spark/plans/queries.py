@@ -5449,8 +5449,9 @@ def x25_sample_system(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     base = scratch_dir("sample_system_")
     wh = Warehouse(spark, base)
-    tbl = wh.table("stg", "li_blocks", li.schema, partition_by=["__bucket"])
-    tbl.overwrite(li.withColumn("__bucket", F.col("l_orderkey") % 16))
+    blocks = {"__bucket": F.col("l_orderkey") % 16}
+    tbl = wh.table("stg", "li_blocks", li.schema, partition_by=blocks)
+    tbl.overwrite(li)
     selected = [
         str(v)
         for v in range(16)

@@ -20,13 +20,13 @@ SCHEMA = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.
 
 
 def _open(spark, path, partitioned):
-    return ManagedTable(spark, path, SCHEMA, partition_by=("__m",) if partitioned else ())
+    key = {"__m": F.substring("k", 1, 1)} if partitioned else None
+    return ManagedTable(spark, path, SCHEMA, partition_by=key)
 
 
-def _frame(spark, rows, partitioned):
+def _frame(spark, rows):
     # two scan partitions, so an unpartitioned write leaves two part files
-    df = spark.createDataFrame(rows, SCHEMA).repartitionByRange(2, "k")
-    return df.withColumn("__m", F.substring("k", 1, 1)) if partitioned else df
+    return spark.createDataFrame(rows, SCHEMA).repartitionByRange(2, "k")
 
 
 def _rows(table) -> list[tuple]:
@@ -66,8 +66,8 @@ def test_crash_at_every_rename_leaves_the_old_or_new_table(spark, tmp_path, cras
         path = str(tmp_path / f"crash{n}" / "t")
         os.makedirs(os.path.dirname(path))
         table = _open(spark, path, partitioned)
-        table.overwrite(_frame(spark, BASE, partitioned))
-        batch = _frame(spark, BATCH, partitioned)
+        table.overwrite(_frame(spark, BASE))
+        batch = _frame(spark, BATCH)
         live = _inodes(table)
         try:
             with crash_at_rename(n):
@@ -91,7 +91,7 @@ def test_crash_at_every_rename_leaves_the_old_or_new_table(spark, tmp_path, cras
 def test_reopen_removes_stray_temps_and_old_copies(spark, tmp_path):
     path = str(tmp_path / "t")
     table = _open(spark, path, False)
-    table.overwrite(_frame(spark, BASE, False))
+    table.overwrite(_frame(spark, BASE))
     for stray in ("t.__tmp_1a2b3c4d", "t.__old_5e6f7a8b"):
         os.makedirs(tmp_path / stray / "sub")
         (tmp_path / stray / "sub" / "part-0.parquet").write_bytes(b"x")

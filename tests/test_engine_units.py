@@ -6775,12 +6775,11 @@ def test_managed_table_empty_reads_are_jvm_empty(spark, tmp_path):
     struct = T.StructType(
         [T.StructField("k", T.StringType()), T.StructField("v", T.LongType())]
     )
-    t = ManagedTable(spark, str(tmp_path / "t_empty"), struct, ("__p",))
+    t = ManagedTable(spark, str(tmp_path / "t_empty"), struct, {"__p": F.lit("p1")})
     assert t.read().rdd.getNumPartitions() == 0
     df = spark.range(3).select(
         F.concat(F.lit("k"), F.col("id")).alias("k"),
         F.col("id").alias("v"),
-        F.lit("p1").alias("__p"),
     )
     t.overwrite(df)
     assert t.read_partitions(["p-absent"]).rdd.getNumPartitions() == 0

@@ -28,12 +28,8 @@ def _table(spark, tmp_path, name="t"):
         ]
     )
     return ManagedTable(
-        spark, str(tmp_path / name), schema, partition_by=("__m",)
+        spark, str(tmp_path / name), schema, partition_by={"__m": F.substring("k", 1, 1)}
     ), schema
-
-
-def _with_m(df):
-    return df.withColumn("__m", F.substring("k", 1, 1))
 
 
 def test_read_partitions_opens_only_requested_dirs(spark, tmp_path):
@@ -41,7 +37,7 @@ def test_read_partitions_opens_only_requested_dirs(spark, tmp_path):
     data = spark.createDataFrame(
         [("a1", 1), ("a2", 2), ("b1", 3), ("c1", 4)], schema
     )
-    tbl.overwrite(_with_m(data), changes=data)
+    tbl.overwrite(data, changes=data)
     # logical read: partition key suppressed, all rows
     assert sorted(tbl.read().columns) == ["k", "v"]
     assert tbl.read().count() == 4
@@ -57,7 +53,7 @@ def test_clustered_write_one_file_per_partition(spark, tmp_path):
     tbl, schema = _table(spark, tmp_path)
     rows = [(f"{p}{i}", i) for p in "abcd" for i in range(25)]
     df = spark.createDataFrame(rows, schema).repartition(16)  # scattered
-    tbl.overwrite(_with_m(df), changes=df)
+    tbl.overwrite(df, changes=df)
     # without the repartition-by-key inside the write, every upstream
     # task writes a file into every partition it holds rows for
     # (up to 16x4 files); clustered -> exactly one per partition
@@ -70,7 +66,7 @@ def test_clustered_write_one_file_per_partition(spark, tmp_path):
 def test_overwrite_partitions_touches_only_carried_partitions(spark, tmp_path):
     tbl, schema = _table(spark, tmp_path)
     base = spark.createDataFrame([("a1", 1), ("b1", 2), ("c1", 3)], schema)
-    tbl.overwrite(_with_m(base), changes=base)
+    tbl.overwrite(base, changes=base)
     # replace partition 'b' only; 'a' and 'c' files must be untouched
     # (the same inodes, never rewritten, in a newly published directory)
     def files(p):
@@ -79,7 +75,7 @@ def test_overwrite_partitions_touches_only_carried_partitions(spark, tmp_path):
 
     before = {p: files(p) for p in "ac"}
     delta = spark.createDataFrame([("b1", 20), ("b2", 21)], schema)
-    version = tbl.overwrite_partitions(_with_m(delta), changes=delta)
+    version = tbl.overwrite_partitions(delta, changes=delta)
     assert version > 0  # changelog advanced (stream consumers see it)
     got = sorted((r.k, r.v) for r in tbl.read().collect())
     assert got == [("a1", 1), ("b1", 20), ("b2", 21), ("c1", 3)]
@@ -99,7 +95,7 @@ def test_interrupted_partition_publish_rolls_back_on_reopen(spark, tmp_path, mon
     partition; re-running the commit then lands the whole batch."""
     tbl, schema = _table(spark, tmp_path)
     base = _generated(spark, schema, "abcd", 5)
-    tbl.overwrite(_with_m(base))
+    tbl.overwrite(base)
     mtimes = {
         p: os.path.getmtime(os.path.join(tbl.storage.path, f"__m={p}"))
         for p in "acd"
@@ -115,7 +111,7 @@ def test_interrupted_partition_publish_rolls_back_on_reopen(spark, tmp_path, mon
 
     monkeypatch.setattr(os, "rename", crash_between_renames)
     with pytest.raises(RuntimeError, match="injected crash"):
-        tbl.overwrite_partitions(_with_m(delta))
+        tbl.overwrite_partitions(delta)
     monkeypatch.undo()
     assert not os.path.exists(tbl.storage.path)
 
@@ -131,7 +127,7 @@ def test_interrupted_partition_publish_rolls_back_on_reopen(spark, tmp_path, mon
         f"{name}.__changelog", f"{name}.__meta.json"
     ]
 
-    tbl.overwrite_partitions(_with_m(delta))
+    tbl.overwrite_partitions(delta)
     expected = {(r.k, r.v) for r in base.collect() if not r.k.startswith("b")}
     expected |= {(r.k, r.v) for r in delta.collect()}
     assert {(r.k, r.v) for r in tbl.read().collect()} == expected
@@ -141,9 +137,9 @@ def test_partition_commit_links_its_change_version(spark, tmp_path):
     """``changes=None`` on a partitioned table: the version hard-links
     the written files, and its rows carry the logical columns only."""
     tbl, schema = _table(spark, tmp_path)
-    tbl.overwrite_partitions(_with_m(_generated(spark, schema, "ab", 4)))
+    tbl.overwrite_partitions(_generated(spark, schema, "ab", 4))
     delta = _generated(spark, schema, "b", 2, v=50)
-    version = tbl.overwrite_partitions(_with_m(delta))
+    version = tbl.overwrite_partitions(delta)
     changes, _ = tbl.changelog.stream_read("c")
     changes = changes.filter(F.col("_version") == version)
     assert sorted(changes.columns) == ["_action", "_version", "k", "v"]
@@ -157,7 +153,7 @@ def test_partition_commit_links_its_change_version(spark, tmp_path):
 def test_append_refuses_partitioned_tables(spark, tmp_path):
     tbl, schema = _table(spark, tmp_path)
     with pytest.raises(ValueError, match="partitioned"):
-        tbl.append(_with_m(_generated(spark, schema, "a", 2)))
+        tbl.append(_generated(spark, schema, "a", 2))
     parent = os.path.dirname(tbl.storage.path)
     assert not [s for s in os.listdir(parent) if s.startswith("t")]
 
@@ -181,3 +177,47 @@ def test_record_linked_flattens_partitions_sharing_a_file_name(spark, tmp_path):
     assert sorted(r.k for r in rows.collect()) == ["a0", "b0", "b1", "c0", "c1", "c2"]
     for path in data_files(str(src)):
         assert os.stat(path).st_nlink == 2
+
+
+def test_read_partitions_opens_each_directory_once(spark, tmp_path):
+    """A value listed twice, and NULL next to "" (both Spark's default
+    partition), open their directory once: a directory opened twice
+    reads its rows twice, and a MERGE against them keeps both copies."""
+    tbl, schema = _table(spark, tmp_path)
+    tbl.overwrite(spark.createDataFrame([("a1", 1), ("b1", 2), (None, 3)], schema))
+    assert [tuple(r) for r in tbl.read_partitions(["a", "a"]).collect()] == [("a1", 1)]
+    assert [tuple(r) for r in tbl.read_partitions([None, ""]).collect()] == [(None, 3)]
+
+
+def test_declared_key_is_derived_from_logical_rows(spark, tmp_path):
+    """The table derives its partition key: a commit of logical rows
+    writes one directory per derived value, a read returns the logical
+    columns, and ``touched`` maps a batch to the values it carries."""
+    tbl, schema = _table(spark, tmp_path)
+    tbl.overwrite_partitions(_generated(spark, schema, "ab", 2))
+    assert sorted(tbl.storage.partitions()) == ["__m=a", "__m=b"]
+    assert sorted(r.k for r in tbl.read_partitions(["b"]).collect()) == ["b0", "b1"]
+    assert tbl.read().columns == ["k", "v"]
+    batch = _generated(spark, schema, "bc", 1)
+    assert sorted(tbl.touched(batch)) == ["b", "c"]
+    assert sorted(r.k for r in tbl.read_partitions(tbl.touched(batch)).collect()) == ["b0", "b1"]
+
+
+def test_touched_read_of_a_flat_or_missing_table_runs_no_spark_job(spark, tmp_path):
+    """A flat table reads whole and a missing partitioned one reads as
+    the empty relation; neither needs the batch's key values, so
+    neither submits a Spark job."""
+    tbl, schema = _table(spark, tmp_path, "missing")
+    flat = ManagedTable(spark, str(tmp_path / "flat"), schema)
+    flat.overwrite(_generated(spark, schema, "ab", 2))
+    batch = _generated(spark, schema, "a", 1)
+    sc = spark.sparkContext
+    sc.setJobGroup("touched_read", "touched read")
+    try:
+        frames = [t.read_partitions(t.touched(batch)) for t in (flat, tbl)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("touched_read")) == []
+    assert frames[0].count() == 4
+    assert frames[1].rdd.getNumPartitions() == 0

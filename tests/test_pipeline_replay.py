@@ -232,8 +232,8 @@ def test_crash_replay_between_write_and_commit(spark, tmp_path):
 
 
 def test_incremental_fact_mode_matches_rebuild(spark, tmp_path_factory):
-    """fact_mode="incremental" (date-partitioned fact, only touched
-    dates recomputed + dynamic-partition-overwritten per cycle) must
+    """fact_mode="incremental" (month-partitioned fact, only touched
+    months recomputed and replaced per cycle) must
     produce the same fact as the reference-parity full rebuild after
     the whole history -> delta1 -> delta2 replay — compared on business
     columns (identity key VALUES are engine-specific and differ by

@@ -92,8 +92,9 @@ def pipeline(spark, tmp_path):
         (landing / e).mkdir(parents=True)
 
     def make(fact_mode: str = "rebuild") -> EntityPipelines:
+        # one warehouse per posture: two may load the same landing files
         clock = lambda: datetime(2022, 3, 1, tzinfo=timezone.utc)  # noqa: E731
-        wh = Warehouse(spark, str(tmp_path / "wh"))
+        wh = Warehouse(spark, str(tmp_path / "wh" / fact_mode))
         return EntityPipelines(spark, wh, str(landing), clock=clock, fact_mode=fact_mode)
 
     _write(landing, "customer", "c0", [_customer(i) for i in range(3)])
@@ -292,3 +293,69 @@ def test_null_partition_value_keeps_its_rows_across_batches(pipeline):
         ("C0", "I0", "None"): 1,
         ("C1", "I0", "None"): 1,
     }
+
+
+def _order_on(date: str, cust: int, item: int) -> tuple:
+    """An order whose ``order_date`` field is the raw text ``date``."""
+    return (date, *_order(1, cust, item)[1:])
+
+
+def _business(p: EntityPipelines) -> list[tuple]:
+    """The fact's rows without its identity key, as sortable text."""
+    rows = p.fact_order.read().drop("order_fact_key").collect()
+    return sorted(tuple(map(str, r)) for r in rows)
+
+
+def test_incremental_fact_equals_the_rebuilt_fact(pipeline):
+    """Both postures, fed the same three wake-ups, end in the same fact:
+    a two-month initial load; an update to a February order plus an
+    order with a NULL (``\\N``) date; an order dated ``2021-3-7``,
+    which belongs to March like the other March orders. The rebuilt
+    fact numbers its keys 1..N, and both facts' keys are unique."""
+    landing, make = pipeline
+    _write(landing, "order", "o_feb", [_order(9, 2, 0, month=2)])
+    ps = {mode: make(mode) for mode in ("rebuild", "incremental")}
+    wake_ups = [
+        {},
+        {"o_upd": [_order(9, 2, 0, qty=7, month=2), _order_on("\\N", 0, 1)]},
+        {"o_short": [_order_on("2021-3-7", 1, 0)]},
+    ]
+    for i, files in enumerate(wake_ups):
+        for name, rows in files.items():
+            _write(landing, "order", name, rows)
+        for p in ps.values():
+            assert _all_succeeded(p.run_all(), ("order",) if i else ("customer", "item", "order"))
+
+    assert _fact(ps["rebuild"]) == {
+        ("C2", "I0", "2021-02-09"): 7,
+        ("C0", "I0", "2021-03-01"): 1,
+        ("C1", "I1", "2021-03-01"): 2,
+        ("C0", "I1", "None"): 1,
+        ("C1", "I0", "2021-03-07"): 1,
+    }
+    assert _business(ps["incremental"]) == _business(ps["rebuild"])
+    for mode, p in ps.items():
+        keys = [r.order_fact_key for r in p.fact_order.read().collect()]
+        assert len(keys) == len(set(keys)), f"{mode}: duplicate fact keys"
+    rebuilt = sorted(r.order_fact_key for r in ps["rebuild"].fact_order.read().collect())
+    assert rebuilt == list(range(1, len(rebuilt) + 1))
+
+
+def test_one_batch_with_null_and_empty_dates_keeps_each_raw_order_once(pipeline):
+    """A ``\\N`` date and a quoted empty date both map to the default
+    partition of ``raw_order``; one batch carrying both must merge into
+    that partition once, so the earlier NULL-date order stays single.
+    The empty date still fails the fact's date cast, so only raw is
+    checked here."""
+    landing, make = pipeline
+    _write(landing, "order", "o_null1", [_order_on("\\N", 0, 0)])
+    p = make("incremental")
+    assert _all_succeeded(p.run_all())
+
+    _write(landing, "order", "o_null2", [_order_on("\\N", 1, 0), _order_on('""', 2, 0)])
+    p.run_all()
+    raw = p.raw["order"].read()
+    keys = p.MERGE_KEYS["order"]
+    assert raw.count() == raw.select(*keys).distinct().count() == 5
+    assert sorted(r.customer_id for r in raw.filter("order_date IS NULL").collect()) == ["C0", "C1"]
+    assert [r.customer_id for r in raw.filter("order_date = ''").collect()] == ["C2"]

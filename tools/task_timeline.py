@@ -1,9 +1,10 @@
 """Task timeline of ``EntityPipelines.run_all`` wake-ups.
 
 Lands perfbench's seeded ``trickle`` inputs (``perfbench/gen.py``) in a
-scratch directory, runs the initial load of an incremental warehouse as
-cycle 0 and then ``--cycles`` cycles (one generated batch plus one
-``run_all()`` each), and prints every task's start and end offset from
+scratch directory, runs the initial load of a warehouse in the
+``--fact-mode`` posture (default ``incremental``) as cycle 0 and then
+``--cycles`` cycles (one generated batch plus one ``run_all()`` each),
+and prints every task's start and end offset from
 the start of its ``run_all()``, read from the engine's own task history
 (``dags[e].history``). A SKIPPED or SUSPENDED task has no end.
 
@@ -17,7 +18,8 @@ partition directories and the number of ``<table>.__tmp_*`` /
 ``<table>.__old_*`` siblings left beside it (0 unless a commit crashed).
 
 Usage:
-    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR] [--jobs] [--files]
+    python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR]
+        [--fact-mode {incremental,rebuild}] [--jobs] [--files]
 
 Measurement-only tooling: never imported by the engine or bench.
 """
@@ -106,6 +108,8 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cycles", type=int, default=3)
     ap.add_argument("--work", default=None, help="scratch directory (default: a temp dir)")
+    ap.add_argument("--fact-mode", choices=("incremental", "rebuild"), default="incremental",
+                    help="the warehouse's fact posture (EntityPipelines fact_mode)")
     ap.add_argument("--jobs", action="store_true", help="print Spark jobs and tasks per task")
     ap.add_argument("--files", action="store_true", help="print data files and partitions per table")
     args = ap.parse_args()
@@ -117,7 +121,7 @@ def main() -> None:
         ds = gen.build(args.seed, gen.SHAPES["trickle"])
         gen.write_initial(ds, landing)
         wh = Warehouse(spark, os.path.join(work, "warehouse"))
-        etl = EntityPipelines(spark, wh, landing, clock=lambda: CLOCK, fact_mode="incremental")
+        etl = EntityPipelines(spark, wh, landing, clock=lambda: CLOCK, fact_mode=args.fact_mode)
         for cycle in range(args.cycles + 1):
             if cycle:
                 gen.write_batch(ds, cycle, landing)
