@@ -37,6 +37,7 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -215,9 +216,21 @@ def fill_identity(
         ranked = ranked.crossJoin(F.broadcast(seed))
         base = F.col("__seed")
     else:
-        base = F.lit(int(existing_max)).cast("long")
+        # a decimal literal is bound through the generated class's
+        # references[], while a long one is inlined into its source: a
+        # long seed made every new seed value a new Janino compile. One
+        # type for every seed (any long fits decimal(20,0)) keeps the
+        # source seed-free; the sum is exact in decimal(22,0) and its
+        # cast back to long raises on overflow under ANSI, as the long
+        # addition did.
+        base = F.lit(Decimal(int(existing_max))).cast("decimal(20,0)")
     w = Window.partitionBy("__bkt").orderBy(*sort_cols)
     key = (base + F.col("__off") + F.row_number().over(w)).cast("long")
+    if existing_max is not None:
+        # Spark types a decimal-to-long cast nullable, though under ANSI
+        # it raises instead; the coalesce keeps the key non-nullable, as
+        # the long sum was, so the stored schema does not change
+        key = F.coalesce(key, F.lit(0))
     news = ranked.select(
         *[key.alias(c) if c == key_col else F.col(c) for c in df.columns]
     )

@@ -312,9 +312,10 @@ class EntityPipelines:
         The recompute unit is the partition: the batch's partitions of
         raw (all of a flat raw) are read and rebuilt whole, exact even
         when the batch updates existing orders, and the fact partitions
-        they map to are replaced. raw_order and fact_order share one
-        partition key, so those are the same values for both; a flat
-        fact is replaced whole."""
+        they map to are replaced, a month whose recompute yields no fact
+        rows (a dim change dropped them all) included. raw_order and
+        fact_order share one partition key, so those are the same values
+        for both; a flat fact is replaced whole."""
         raw, fact = self.raw["order"], self.fact_order
         src, version = raw.changelog.stream_read("fact_tsk")
         if src is None:
@@ -370,8 +371,9 @@ class EntityPipelines:
                 # continues past the stored maximum, read before it
                 existing_max=fact.identity_max("order_fact_key", touched),
             )
-            # the changelog links the rewritten groups (UPSERT granularity)
-            fact.overwrite_partitions(rebuilt.select(*fact.schema.names))
+            # the changelog links the rewritten groups (UPSERT granularity);
+            # every touched month is replaced, one left without rows too
+            fact.overwrite_partitions(rebuilt.select(*fact.schema.names), replaced=touched)
         finally:
             agg.unpersist()
         raw.changelog.stream_commit("fact_tsk", version)

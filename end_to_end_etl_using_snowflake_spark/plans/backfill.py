@@ -50,7 +50,7 @@ _incr_state: dict[tuple[int, str], dict] = {}
 _incr_memo: dict[tuple[int, str], DataFrame] = {}
 
 # the incremental scenario holds back orders from the last two months of
-# the 1995-2001 span (~2.5% of rows, ~60 of ~2400 order_date partitions)
+# the 1995-2001 span (~2.5% of rows, 2 of ~80 order-month partitions)
 INCR_CUTOFF = "2001-06-01"
 
 

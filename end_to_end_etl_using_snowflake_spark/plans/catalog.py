@@ -83,10 +83,10 @@ class ManagedTable:
         missing or empty table or for a commit that replaces all of it
         (``replaced`` None, a flat table's ``touched``), so a rebuild
         numbers from 1. A partition replace continues past every stored
-        key, the replaced partitions' included: one whose recompute
-        yields no rows is kept. Read from the parquet footers
-        (``ParquetTable.column_max`` — driver metadata, no Spark job);
-        when a row group lacks statistics it falls back to one scan."""
+        key, the replaced partitions' included, so no key is reused.
+        Read from the parquet footers (``ParquetTable.column_max`` —
+        driver metadata, no Spark job); when a row group lacks
+        statistics it falls back to one scan."""
         if replaced is None or not self.storage.exists():
             return 0
         m = self.storage.column_max(col)
@@ -102,9 +102,19 @@ class ManagedTable:
         are skipped (a batch can carry brand-new partitions)."""
         if values is None:
             return self.read()
+        dirs = [os.path.join(self.storage.path, d) for d in self._partition_dirs(values)]
+        dirs = [d for d in dirs if os.path.exists(d)]
+        if not dirs:
+            # brand-new partitions: the same empty LocalRelation as a
+            # missing table, so the MERGE against them loses its joins
+            return empty_frame(self.spark, self.schema)
+        return self.spark.read.schema(self.schema).parquet(*dirs)
+
+    def _partition_dirs(self, values: Sequence) -> list[str]:
+        """The directories, relative to the table, of partition-key
+        ``values``, each once."""
         (pcol,) = self.storage.partition_by
-        # Spark writes a NULL (or empty) value to its default partition;
-        # each directory is opened once
+        # Spark writes a NULL (or empty) value to its default partition
         values = dict.fromkeys(
             "__HIVE_DEFAULT_PARTITION__" if v in (None, "") else str(v) for v in values
         )
@@ -115,13 +125,7 @@ class ManagedTable:
         unsafe = [v for v in values if any(c in "/\\:%#?{}[]" for c in v)]
         if unsafe:
             raise ValueError(f"non-path-safe partition values: {unsafe!r}")
-        dirs = [os.path.join(self.storage.path, f"{pcol}={v}") for v in values]
-        dirs = [d for d in dirs if os.path.exists(d)]
-        if not dirs:
-            # brand-new partitions: the same empty LocalRelation as a
-            # missing table, so the MERGE against them loses its joins
-            return empty_frame(self.spark, self.schema)
-        return self.spark.read.schema(self.schema).parquet(*dirs)
+        return [f"{pcol}={v}" for v in values]
 
     def _commit(
         self, df: DataFrame, changes: DataFrame | None, action: str, keep: Sequence[str] = ()
@@ -167,15 +171,26 @@ class ManagedTable:
         return self._commit(df, changes, action)
 
     def overwrite_partitions(
-        self, df: DataFrame, changes: DataFrame | None = None, action: str = "UPSERT"
+        self,
+        df: DataFrame,
+        changes: DataFrame | None = None,
+        action: str = "UPSERT",
+        replaced: Sequence | None = None,
     ) -> int:
         """Partition-scoped replace (the partition-pruned MERGE commit):
-        only the partitions the rows of ``df`` map to are rewritten, the
-        others are kept, and a missing table is created. An unpartitioned
-        table is one partition, so it is replaced whole, as
-        ``overwrite`` does. ``changes`` as in ``overwrite``, so stream
-        consumers do not depend on which commit a producer used."""
-        return self._commit(df, changes, action, self.storage.partitions())
+        the partitions the rows of ``df`` map to and those of key values
+        ``replaced`` are rewritten, the others are kept, and a missing
+        table is created. A ``replaced`` value no row of ``df`` maps to
+        loses its partition: a recompute that yields no rows for it
+        drops the old ones. An unpartitioned table is one
+        partition, so it is replaced whole, as ``overwrite`` does.
+        ``changes`` as in ``overwrite``, so stream consumers do not
+        depend on which commit a producer used."""
+        keep = self.storage.partitions()
+        if replaced and keep:
+            gone = set(self._partition_dirs(replaced))
+            keep = [d for d in keep if d not in gone]
+        return self._commit(df, changes, action, keep)
 
     def truncate(self) -> int:
         """M5 TRUNCATE (customer-...sql:172)."""

@@ -1189,7 +1189,8 @@ def x3_time_spine_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta's partial aggregate — (fact ∪ agg(delta)) GROUP BY SUM — and
     the oracle is the FULL aggregate over everything: partial-aggregate
     merge must be bit-identical to the rebuild. O(delta) per cycle
-    instead of O(history); pair with dynamic partition overwrite.""",
+    instead of O(history); pair with a partition replace of the touched
+    months (``ManagedTable.overwrite_partitions``).""",
     tags=("M3", "A1", "scale", "incremental"),
 )
 def m7_incremental_fact_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

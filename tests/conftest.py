@@ -22,6 +22,15 @@ def spark(tmp_path_factory):
     yield spark
 
 
+@pytest.fixture
+def compiles(spark):
+    """``compiles()`` is the number of classes Spark's code generator
+    has compiled in this JVM so far (``CodegenMetrics``' compilation-time
+    histogram takes one sample per Janino compile)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 class InjectedCrash(RuntimeError):
     """The failure ``crash_at_rename`` injects in place of a rename."""
 

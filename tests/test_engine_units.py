@@ -83,22 +83,45 @@ def test_fill_identity_contiguous(spark):
 def test_fill_identity_literal_null_key_plans_no_union(spark):
     """A key column that is a literal NULL above a cache (a fact
     rebuild's added key) lets the optimizer fold fill_identity's isNull
-    split away: the plan has no Union. The seeded values are
-    ``existing_max`` plus the same rank the unseeded fill assigns."""
+    split away: the plan has no Union and a non-nullable key. The
+    seeded values are ``existing_max`` plus the same rank the unseeded
+    fill assigns."""
     base = spark.range(0, 500).select(
         F.concat(F.lit("k"), (F.col("id") * 37) % 1000).alias("name")
     ).persist()
     try:
         df = base.withColumn("id", F.lit(None).cast("long"))
         seeded = M.fill_identity(df, "id", order_by=["name"], existing_max=100)
-        plan = seeded._jdf.queryExecution().optimizedPlan().toString()
-        assert "Union" not in plan
+        optimized = seeded._jdf.queryExecution().optimizedPlan()
+        assert "Union" not in optimized.toString()
+        # the written schema is the optimized plan's: its key stays
+        # non-nullable, so stored files keep their schema
+        assert not optimized.schema().apply("id").nullable()
         ranks = {r.name: r.id for r in M.fill_identity(df, "id", order_by=["name"]).collect()}
         got = {r.name: r.id for r in seeded.collect()}
         assert got == {k: v + 100 for k, v in ranks.items()}
         assert sorted(got.values()) == list(range(101, 101 + len(got)))
     finally:
         base.unpersist()
+
+
+def test_fill_identity_new_seed_compiles_nothing(spark, compiles):
+    """A second fill of the same frame with another ``existing_max``
+    reuses every generated class: the seed is bound, not inlined into
+    the generated source. Each fill's new keys are ``existing_max +
+    1..N``, and a key past the long range fails loudly."""
+    df = _df(spark, [(None, n) for n in "dcba"] + [(7, "z")], "id long, name string")
+
+    def new_keys(seed: int) -> list[int]:
+        out = M.fill_identity(df, "id", order_by=["name"], existing_max=seed)
+        return sorted(r.id for r in out.collect() if r.name != "z")
+
+    assert new_keys(332) == [333, 334, 335, 336]
+    before = compiles()
+    assert new_keys(2197) == [2198, 2199, 2200, 2201]
+    assert compiles() - before == 0
+    with pytest.raises(Exception, match="OVERFLOW"):
+        new_keys(2**63 - 3)
 
 
 def test_local_frame_rejects_row_arity_mismatch(spark):

@@ -1,7 +1,7 @@
 """Scale-path mechanics: the pieces that only matter at 100 TB,
 exercised at toy scale.
 
-- dynamic partition overwrite: fact maintenance must rewrite ONLY the
+- partition overwrite: fact maintenance must rewrite ONLY the
   partitions a batch touches;
 - bucketed co-located join: pre-bucketed tables join with NO shuffle
   exchange (the bucketing/co-location story for repeated big joins);

@@ -359,3 +359,41 @@ def test_one_batch_with_null_and_empty_dates_keeps_each_raw_order_once(pipeline)
     assert raw.count() == raw.select(*keys).distinct().count() == 5
     assert sorted(r.customer_id for r in raw.filter("order_date IS NULL").collect()) == ["C0", "C1"]
     assert [r.customer_id for r in raw.filter("order_date = ''").collect()] == ["C2"]
+
+
+def test_incremental_fact_drops_a_touched_month_left_without_rows(pipeline):
+    """A touched month whose recompute from raw yields no fact rows is
+    replaced by no rows, as the rebuild drops them: the initial load
+    holds a February order of I0 and two March orders of I1; the next
+    wake-up end-dates I1, so its new March order and both old ones
+    join no current item row."""
+    landing, make = pipeline
+    _write(landing, "order", "o0", [_order(9, 0, 0, month=2), _order(1, 1, 1), _order(2, 2, 1)])
+    ps = {mode: make(mode) for mode in ("rebuild", "incremental")}
+    for p in ps.values():
+        assert _all_succeeded(p.run_all())
+
+    _write(landing, "item", "i_end", [_item(1)[:3] + ("2021-03-15",) + _item(1)[4:]])
+    _write(landing, "order", "o1", [_order(3, 0, 1)])
+    for p in ps.values():
+        assert _all_succeeded(p.run_all(), ("item", "order"))
+
+    assert _fact(ps["rebuild"]) == {("C0", "I0", "2021-02-09"): 1}
+    assert _business(ps["incremental"]) == _business(ps["rebuild"])
+
+
+def test_warm_wake_up_compiles_nothing(pipeline, compiles):
+    """Once the pipeline's plans have run, a wake-up reuses every
+    generated class, though each wake-up inserts a new customer, item
+    and order and so moves all three identity seeds."""
+    landing, make = pipeline
+    p = make("incremental")
+    assert _all_succeeded(p.run_all())
+    for i in range(3, 6):
+        _write(landing, "customer", f"c{i}", [_customer(i)])
+        _write(landing, "item", f"i{i}", [_item(i)])
+        _write(landing, "order", f"o{i}", [_order(i, i, i)])
+        before = compiles()
+        assert _all_succeeded(p.run_all())
+    assert compiles() - before == 0
+    assert len(_fact(p)) == 5

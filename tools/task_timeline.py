@@ -13,13 +13,20 @@ task run and pipe refresh, grouped by the job descriptions the engine
 sets (``task <dag>.<task>``, ``pipe <name> ingest``) and read from the
 JVM status store, which is populated with the UI off.
 
+``--compiles`` also prints each cycle's Janino compiles and their
+total milliseconds, read from Spark's own ``CodegenMetrics``
+compilation-time histogram (one sample per compiled class) through
+py4j. The count is exact; the milliseconds are exact until the
+histogram's sampling reservoir (1028 samples) overflows, and are then
+scaled from the new samples it kept (printed with a ``~``).
+
 ``--files`` also prints, after each cycle, every table's data files and
 partition directories and the number of ``<table>.__tmp_*`` /
 ``<table>.__old_*`` siblings left beside it (0 unless a commit crashed).
 
 Usage:
     python tools/task_timeline.py [--seed 1] [--cycles 3] [--work DIR]
-        [--fact-mode {incremental,rebuild}] [--jobs] [--files]
+        [--fact-mode {incremental,rebuild}] [--jobs] [--compiles] [--files]
 
 Measurement-only tooling: never imported by the engine or bench.
 """
@@ -27,6 +34,7 @@ Measurement-only tooling: never imported by the engine or bench.
 from __future__ import annotations
 
 import argparse
+import collections
 import os
 import shutil
 import sys
@@ -92,6 +100,26 @@ def job_census(sc, after: int) -> dict[str, list[int]]:
     return out
 
 
+def compile_snapshot(spark) -> tuple[int, collections.Counter]:
+    """(compiles so far, Counter of the kept compile-time samples in
+    ms) of the JVM's ``CodegenMetrics.METRIC_COMPILATION_TIME``."""
+    hist = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return hist.getCount(), collections.Counter(hist.getSnapshot().getValues())
+
+
+def compile_delta(before, after) -> tuple[int, str]:
+    """Compiles between two ``compile_snapshot`` reads and their total
+    ms: the samples ``after`` holds beyond ``before``, exact while the
+    reservoir has dropped none, else scaled to the compile count."""
+    n = after[0] - before[0]
+    new = after[1] - before[1]
+    total = sum(v * c for v, c in new.items())
+    if sum(after[1].values()) == after[0]:
+        return n, f"{total}"
+    kept = sum(new.values())
+    return n, f"~{round(total * n / kept) if kept else 0}"
+
+
 def file_census(wh: Warehouse) -> list[tuple[str, int, int, int]]:
     """(schema.table, data files, partitions, stray temp and old
     siblings) of every table of ``wh``."""
@@ -111,6 +139,8 @@ def main() -> None:
     ap.add_argument("--fact-mode", choices=("incremental", "rebuild"), default="incremental",
                     help="the warehouse's fact posture (EntityPipelines fact_mode)")
     ap.add_argument("--jobs", action="store_true", help="print Spark jobs and tasks per task")
+    ap.add_argument("--compiles", action="store_true",
+                    help="print Janino compiles and their milliseconds per cycle")
     ap.add_argument("--files", action="store_true", help="print data files and partitions per table")
     args = ap.parse_args()
 
@@ -127,8 +157,12 @@ def main() -> None:
                 gen.write_batch(ds, cycle, landing)
             tracker = spark.sparkContext.statusTracker()
             last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+            compiled = compile_snapshot(spark) if args.compiles else None
             wall, rows = timeline(etl)
             print(f"cycle {cycle}: run_all {wall:.2f} s")
+            if args.compiles:
+                n, ms = compile_delta(compiled, compile_snapshot(spark))
+                print(f"  compiles {n}, {ms} ms")
             for start, end, name, state in rows:
                 span = f"{start:6.2f} -> {end:6.2f}" if end is not None else f"{start:6.2f}          "
                 print(f"  {span}  {name:34s} {state}")
