@@ -158,6 +158,36 @@ def parquet_row_count(path: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
+def parquet_schema(path: str) -> T.StructType:
+    """The schema a Spark scan of a parquet file reads, from its FOOTER
+    with no Spark job: the row metadata a Spark writer stores there
+    (``org.apache.spark.sql.parquet.row.metadata``), else the file's
+    own schema mapped as Spark maps it (a timestamp with no time zone
+    reads as ``timestamp_ntz``); every level nullable, as Spark reads
+    files."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def nullable(t: T.DataType) -> T.DataType:
+        if isinstance(t, T.StructType):
+            return T.StructType(
+                [T.StructField(f.name, nullable(f.dataType), True, f.metadata) for f in t.fields]
+            )
+        if isinstance(t, T.ArrayType):
+            return T.ArrayType(nullable(t.elementType), True)
+        if isinstance(t, T.MapType):
+            return T.MapType(nullable(t.keyType), nullable(t.valueType), True)
+        return t
+
+    meta = pq.read_metadata(path)
+    stored = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is None:
+        return nullable(from_arrow_schema(meta.schema.to_arrow_schema(), prefer_timestamp_ntz=True))
+    return nullable(T.StructType.fromJson(json.loads(stored)))
+
+
 def write_parquet(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
     """The storage layer's one Spark write: ``df`` as parquet files in
     the new directory ``path``, one ``<col>=<value>`` directory level

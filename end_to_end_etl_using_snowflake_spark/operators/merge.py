@@ -32,6 +32,9 @@ Scale notes (100 TB target):
   reference's full rebuild (order-...sql:179).
 - The dedup window shuffles only the source batch, never the target.
 - Identity assignment sorts only the *insert* batch, not the table.
+  A batch bounded within ``IDENTITY_BUCKET_ROWS`` (a change batch)
+  ranks in one window; any other (a 100M-row initial load) ranks in
+  ``spark.sql.shuffle.partitions`` parallel hash buckets.
 """
 
 from __future__ import annotations
@@ -41,6 +44,14 @@ from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# The most insert rows fill_identity ranks in one window, i.e. in one
+# task. Ranking (date, long, long) rows on a 4-core VM with 8 shuffle
+# partitions, warm: at 2^16 rows one window took 0.4 s and the buckets
+# 0.8 s, at 2^18 0.8 s and 1.0 s, at 2^20 2.6-3.0 s and 1.9 s; so past
+# about this many rows the buckets' parallel sort outruns the offset
+# pass they pay for.
+IDENTITY_BUCKET_ROWS = 1 << 18
 
 
 def dedup_latest(
@@ -152,6 +163,7 @@ def fill_identity(
     key_col: str,
     order_by: Sequence[str],
     existing_max: int | None = None,
+    max_rows: int | None = None,
 ) -> DataFrame:
     """Snowflake ``number autoincrement`` analog (customer-...sql:32).
 
@@ -161,10 +173,18 @@ def fill_identity(
     ``monotonically_increasing_id()``. The rank is computed distributed:
     hash-bucket on the sort key, per-bucket ``row_number`` plus the
     bucket's cumulative offset (the effective total order is
-    ``(bucket, *order_by)``). No global single-partition window, so a
-    100M-row initial load ranks in parallel; the offset table is one row
-    per bucket. Key *values* are engine-specific — tests assert
-    uniqueness/contiguity/determinism only (FIXTURES.md).
+    ``(bucket, *order_by)``). No global single-partition window over an
+    unbounded batch, so a 100M-row initial load ranks in parallel; the
+    offset table is one row per bucket. Key *values* are
+    engine-specific — tests assert uniqueness/contiguity/determinism
+    only (FIXTURES.md).
+
+    ``max_rows`` is an upper bound on the insert rows, known to the
+    caller without a Spark job (a change batch's recorded row counts,
+    the footers of the rows it rebuilds). A bound within
+    ``IDENTITY_BUCKET_ROWS`` ranks in one window over ``order_by``
+    alone, with no offset pass; a larger or unknown (``None``) bound
+    keeps the ``spark.sql.shuffle.partitions`` buckets.
 
     ``existing_max`` seeds the new keys; ``None`` folds ``max(key_col)``
     of ``df`` into the plan. When ``key_col`` is a literal NULL above
@@ -176,14 +196,14 @@ def fill_identity(
     news = df.filter(F.col(key_col).isNull())
     spark = news.sparkSession
 
-    # Distributed rank: a global Window.orderBy would pull every insert
-    # row into ONE partition (fatal for initial loads at scale). Instead
-    # bucket by a hash of the sort key — a pure function of row data, so
-    # every recomputation agrees, unlike repartitionByRange's sampled
-    # bounds — rank within each bucket, and add the bucket's cumulative
-    # offset. Total order: (bucket, *order_by); still deterministic and
-    # contiguous, and the per-bucket count pass touches only the insert
-    # batch.
+    # Distributed rank: a global Window.orderBy over an unbounded batch
+    # would pull every insert row into ONE partition (fatal for initial
+    # loads at scale). Instead bucket by a hash of the sort key — a pure
+    # function of row data, so every recomputation agrees, unlike
+    # repartitionByRange's sampled bounds — rank within each bucket, and
+    # add the bucket's cumulative offset. Total order: (bucket,
+    # *order_by); still deterministic and contiguous, and the per-bucket
+    # count pass touches only the insert batch.
     #
     # r16: the whole assignment is ONE lazy plan — no driver round trip.
     # The cumulative offsets were previously a collect() + re-broadcast
@@ -191,24 +211,36 @@ def fill_identity(
     # they are now the same per-bucket counts folded through a bounded
     # triangular self-join (offset(b) = sum of counts of lower buckets,
     # O(buckets^2) comparisons over at most `shuffle.partitions` rows —
-    # driver-free, and no single-partition window, preserving the
-    # test_fill_identity_no_global_window pin). The max() seed likewise
-    # folds in as a broadcast 1-row aggregate when not supplied.
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # driver-free). The max() seed likewise folds in as a broadcast
+    # 1-row aggregate when not supplied.
+    #
+    # A batch bounded within IDENTITY_BUCKET_ROWS, which one task
+    # ranks, skips the offset pass (its count, self-join and broadcasts
+    # cost a change batch six Spark jobs) and ranks in one window. An
+    # unknown or larger bound keeps the buckets, so the
+    # test_fill_identity_no_global_window pin still holds for every
+    # batch that could outgrow one task.
     sort_cols = [F.col(c) for c in order_by]
-    bucketed = news.withColumn(
-        "__bkt", F.pmod(F.xxhash64(*sort_cols), F.lit(n_buckets)).cast("int")
-    )
-    counts = bucketed.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__cnt"))
-    lower = counts.select(
-        F.col("__bkt").alias("__lb"), F.col("__cnt").alias("__lc")
-    )
-    offsets = (
-        counts.join(F.broadcast(lower), F.col("__lb") < F.col("__bkt"), "left")
-        .groupBy("__bkt")
-        .agg(F.coalesce(F.sum("__lc"), F.lit(0)).cast("long").alias("__off"))
-    )
-    ranked = bucketed.join(F.broadcast(offsets), "__bkt")
+    if max_rows is not None and max_rows <= IDENTITY_BUCKET_ROWS:
+        ranked = news
+        rank = F.row_number().over(Window.orderBy(*sort_cols))
+    else:
+        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        bucketed = news.withColumn(
+            "__bkt", F.pmod(F.xxhash64(*sort_cols), F.lit(n_buckets)).cast("int")
+        )
+        counts = bucketed.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__cnt"))
+        lower = counts.select(
+            F.col("__bkt").alias("__lb"), F.col("__cnt").alias("__lc")
+        )
+        offsets = (
+            counts.join(F.broadcast(lower), F.col("__lb") < F.col("__bkt"), "left")
+            .groupBy("__bkt")
+            .agg(F.coalesce(F.sum("__lc"), F.lit(0)).cast("long").alias("__off"))
+        )
+        ranked = bucketed.join(F.broadcast(offsets), "__bkt")
+        w = Window.partitionBy("__bkt").orderBy(*sort_cols)
+        rank = F.col("__off") + F.row_number().over(w)
     if existing_max is None:
         seed = df.agg(
             F.coalesce(F.max(key_col), F.lit(0)).cast("long").alias("__seed")
@@ -220,12 +252,11 @@ def fill_identity(
         # references[], while a long one is inlined into its source: a
         # long seed made every new seed value a new Janino compile. One
         # type for every seed (any long fits decimal(20,0)) keeps the
-        # source seed-free; the sum is exact in decimal(22,0) and its
-        # cast back to long raises on overflow under ANSI, as the long
+        # source seed-free; the sum is exact in decimal and its cast
+        # back to long raises on overflow under ANSI, as the long
         # addition did.
         base = F.lit(Decimal(int(existing_max))).cast("decimal(20,0)")
-    w = Window.partitionBy("__bkt").orderBy(*sort_cols)
-    key = (base + F.col("__off") + F.row_number().over(w)).cast("long")
+    key = (base + rank).cast("long")
     if existing_max is not None:
         # Spark types a decimal-to-long cast nullable, though under ANSI
         # it raises instead; the coalesce keeps the key non-nullable, as

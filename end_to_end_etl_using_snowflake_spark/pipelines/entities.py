@@ -290,7 +290,12 @@ class EntityPipelines:
         ident = f"{entity}_dim_key"
         try:
             out = M.fill_identity(
-                merged, ident, order_by=keys, existing_max=dim.identity_max(ident)
+                merged,
+                ident,
+                order_by=keys,
+                existing_max=dim.identity_max(ident),
+                # the inserts are some of the batch's change rows
+                max_rows=raw.changelog.stream_rows("dim_tsk", version),
             )
             dim.overwrite(out.select(*dim.schema.names), changes=typed)
         finally:
@@ -322,6 +327,9 @@ class EntityPipelines:
             return
         touched = raw.touched(src)
         ro = raw.read_partitions(touched)
+        # the rebuilt groups are at most the raw rows read; a bound past
+        # one window's rows changes nothing, so counting stops there
+        max_rows = raw.stored_rows(touched, M.IDENTITY_BUCKET_ROWS)
         dc = self.dim_customer.read().select("customer_dim_key", "customer_id")
         di = (
             self.dim_item.read()
@@ -348,15 +356,12 @@ class EntityPipelines:
                 F.sum(money("net_profit")).cast("decimal(20,2)").alias("net_profit"),
             )
             # The reference's ORDER BY order_date (O1, order-...sql:212)
-            # is dropped here (r16): fill_identity's bucketed rank
-            # re-shuffles by hash(__bkt), so the sort never reached
-            # the stored layout — it was a pure range-exchange + sort
-            # cost (Snowflake likewise treats
+            # is dropped here (r16): fill_identity's rank sorts by
+            # (order_date, customer_dim_key, item_dim_key) itself,
+            # independently of input order, so a sort here would be a
+            # pure range-exchange + sort cost (Snowflake likewise treats
             # INSERT ... SELECT ORDER BY as a clustering hint, not a
-            # semantic guarantee). The audit oracle is order-insensitive
-            # and the identity assignment orders by (order_date,
-            # customer_dim_key, item_dim_key) independently of input
-            # order, so the final state is bit-identical.
+            # semantic guarantee). The audit oracle is order-insensitive.
         )
         # cached without the key column: the literal NULL key added
         # above the cache lets the optimizer reduce fill_identity to the
@@ -370,6 +375,7 @@ class EntityPipelines:
                 # a full rebuild numbers from 1; a partition replace
                 # continues past the stored maximum, read before it
                 existing_max=fact.identity_max("order_fact_key", touched),
+                max_rows=max_rows,
             )
             # the changelog links the rewritten groups (UPSERT granularity);
             # every touched month is replaced, one left without rows too

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.dml import ParquetTable, empty_frame
+from ..operators.dml import ParquetTable, data_files, empty_frame, parquet_row_count
 from ..streaming.changelog import Changelog
 
 SCHEMAS = ("stg", "raw", "transformed")
@@ -102,13 +102,31 @@ class ManagedTable:
         are skipped (a batch can carry brand-new partitions)."""
         if values is None:
             return self.read()
-        dirs = [os.path.join(self.storage.path, d) for d in self._partition_dirs(values)]
-        dirs = [d for d in dirs if os.path.exists(d)]
+        dirs = self._stored_dirs(values)
         if not dirs:
             # brand-new partitions: the same empty LocalRelation as a
             # missing table, so the MERGE against them loses its joins
             return empty_frame(self.spark, self.schema)
         return self.spark.read.schema(self.schema).parquet(*dirs)
+
+    def stored_rows(self, values: Sequence | None, limit: int) -> int | None:
+        """The rows ``read_partitions(values)`` reads, summed from the
+        parquet footers (driver metadata, no Spark job); None once the
+        sum passes ``limit``, so at most the footers of about ``limit``
+        rows are read."""
+        dirs = [self.storage.path] if values is None else self._stored_dirs(values)
+        n = 0
+        for d in dirs:
+            for path in data_files(d):
+                n += parquet_row_count(path)
+                if n > limit:
+                    return None
+        return n
+
+    def _stored_dirs(self, values: Sequence) -> list[str]:
+        """The directories of partition-key ``values`` that exist."""
+        dirs = [os.path.join(self.storage.path, d) for d in self._partition_dirs(values)]
+        return [d for d in dirs if os.path.exists(d)]
 
     def _partition_dirs(self, values: Sequence) -> list[str]:
         """The directories, relative to the table, of partition-key

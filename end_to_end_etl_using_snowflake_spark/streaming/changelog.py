@@ -27,8 +27,12 @@ offset. The write-table -> commit-offset sequence is crash-safe the
 same way Structured Streaming's is: a re-run re-reads the same batch
 and the downstream MERGE is idempotent for identical input.
 
-Scale: the changelog is partitioned by ``_version`` so offset reads
-prune to new files only; metadata (one small JSON per table) stays on
+Scale: the changelog is partitioned by ``_version``, and a stream
+read passes Spark the unread ``_version=N`` directories by name, so it
+lists and opens the new versions only, however long the log's history
+(past 32 unread versions, Spark lists them with a parallel job). It
+reads them with the schema Spark stored in their parquet footers, so
+no Spark job infers it. Metadata (one small JSON per table) stays on
 the driver — row data never does.
 """
 
@@ -42,8 +46,15 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators.dml import data_files, parquet_row_count, write_parquet
+from ..operators.dml import (
+    data_files,
+    empty_frame,
+    parquet_row_count,
+    parquet_schema,
+    write_parquet,
+)
 
 ACTION_COL = "_action"
 VERSION_COL = "_version"
@@ -178,19 +189,58 @@ class Changelog:
     def stream_read(self, consumer: str) -> tuple[DataFrame, int]:
         """Unconsumed change rows + the version to commit after applying.
 
-        Partition pruning on _version keeps this proportional to the new
-        data, not the table's history; a version above the meta's (a
-        commit that crashed before its meta write) is not read.
+        The read opens the unread ``_version=N`` directories only (the
+        log is the ``basePath``, so ``_version`` and ``_action`` stay
+        columns): its cost follows the new data, not the log's history,
+        and a version above the meta's (a commit that crashed before its
+        meta write) is not read. The schema is the one the versions'
+        writer stored (:meth:`_schema`), so no Spark job runs before an
+        action. A range of truncate bumps alone, which write no
+        directory, reads as an empty frame of that schema; a log with no
+        data file reads as None, as a missing one does.
         """
         meta = self._read_meta()
         current = meta["version"]
         offset = meta["offsets"].get(consumer, 0)
         if not os.path.exists(self.log_path):
             return None, current
-        df = self.spark.read.parquet(self.log_path).filter(
-            F.col(VERSION_COL).between(offset + 1, current)
-        )
+        dirs = [self._version_dir(v) for v in range(offset + 1, current + 1)]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        schema = self._schema(dirs, current)
+        if schema is None:
+            return None, current
+        if not dirs:
+            return empty_frame(self.spark, schema), current
+        df = self.spark.read.schema(schema).option("basePath", self.log_path).parquet(*dirs)
         return df, current
+
+    def _version_dir(self, version: int) -> str:
+        return os.path.join(self.log_path, f"{VERSION_COL}={version}")
+
+    def _schema(self, dirs: list[str], current: int) -> T.StructType | None:
+        """The change rows' schema: the one Spark stored in the footer
+        of the newest data file of ``dirs`` (else of the log's newest
+        committed version), then ``_version`` int and ``_action``
+        string, the types Spark infers for the directory names. None
+        when no committed version holds a data file."""
+
+        def newest_first():
+            yield from reversed(dirs)
+            prefix = f"{VERSION_COL}="
+            listed = (e for e in os.listdir(self.log_path) if e.startswith(prefix))
+            versions = sorted((int(e[len(prefix):]) for e in listed), reverse=True)
+            yield from (self._version_dir(v) for v in versions if v <= current)
+
+        for d in newest_first():
+            for path in data_files(d):
+                return T.StructType(
+                    parquet_schema(path).fields
+                    + [
+                        T.StructField(VERSION_COL, T.IntegerType()),
+                        T.StructField(ACTION_COL, T.StringType()),
+                    ]
+                )
+        return None
 
     def stream_has_data(self, consumer: str) -> bool:
         """system$stream_has_data analog (customer-...sql:66): cheap
@@ -202,6 +252,17 @@ class Changelog:
         rows = meta.get("rows", {})
         offset = meta["offsets"].get(consumer, 0)
         return any(rows.get(str(v), 0) > 0 for v in range(offset + 1, meta["version"] + 1))
+
+    def stream_rows(self, consumer: str, version: int) -> int | None:
+        """The change rows ``stream_read`` returned with ``version``:
+        the row counts recorded at commit of the consumer's unread
+        versions, summed with no Spark job; None when one of them has
+        no recorded count."""
+        meta = self._read_meta()
+        rows = meta.get("rows", {})
+        offset = meta["offsets"].get(consumer, 0)
+        counts = [rows.get(str(v)) for v in range(offset + 1, version + 1)]
+        return None if None in counts else sum(counts)
 
     def stream_commit(self, consumer: str, version: int) -> None:
         """Advance the consumer offset (the transactional half of T1 —

@@ -7,6 +7,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from end_to_end_etl_using_snowflake_spark.operators import dml
 from end_to_end_etl_using_snowflake_spark.operators import merge as M
@@ -122,6 +123,63 @@ def test_fill_identity_new_seed_compiles_nothing(spark, compiles):
     assert compiles() - before == 0
     with pytest.raises(Exception, match="OVERFLOW"):
         new_keys(2**63 - 3)
+
+
+def _jobs_of(spark, group: str, action):
+    """(``action()``, the number of Spark jobs it ran), counted through
+    a job group once the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _windows(df) -> tuple[str, list[str]]:
+    """The executed plan of ``df`` and its Window operators."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan, re.findall(r"\bWindow \[", plan)
+
+
+def test_fill_identity_small_bound_ranks_in_one_window(spark):
+    """A ``max_rows`` bound within one bucket plans the rank as one
+    window over ``order_by``, with no offset pass: no bucket column,
+    no per-bucket ``count(1)`` aggregate and no broadcast. The new keys are
+    ``existing_max + 1..N`` in ``order_by`` order, and a second run
+    assigns the same keys."""
+    names = [f"k{(i * 37) % 1000:03d}" for i in range(50)]
+    df = _df(spark, [(None, n) for n in names] + [(7, "z")], "id long, name string")
+
+    def fill():
+        return M.fill_identity(df, "id", order_by=["name"], existing_max=100, max_rows=50)
+
+    plan, windows = _windows(fill())
+    assert len(windows) == 1, plan
+    for part in ("__bkt", "count(1)", "Broadcast"):
+        assert part not in plan, plan
+    got = {r.name: r.id for r in fill().collect()}
+    assert got.pop("z") == 7
+    assert [got[n] for n in sorted(got)] == list(range(101, 151))
+    assert {r.name: r.id for r in fill().collect()} == {**got, "z": 7}
+
+
+def test_fill_identity_bound_past_one_bucket_keeps_buckets(spark):
+    """A bound above ``IDENTITY_BUCKET_ROWS`` keeps the bucketed rank:
+    the ``__bkt`` buckets and their broadcast ``count(1)`` offsets stay
+    planned, and the keys stay contiguous."""
+    df = _df(spark, [(None, n) for n in "edcba"], "id long, name string")
+    out = M.fill_identity(
+        df, "id", order_by=["name"], existing_max=10, max_rows=M.IDENTITY_BUCKET_ROWS + 1
+    )
+    plan, _ = _windows(out)
+    for part in ("__bkt", "count(1)", "BroadcastExchange"):
+        assert part in plan, plan
+    assert sorted(r.id for r in out.collect()) == [11, 12, 13, 14, 15]
 
 
 def test_local_frame_rejects_row_arity_mismatch(spark):
@@ -271,6 +329,88 @@ def test_changelog_truncate_bump(spark, tmp_path):
     log.stream_commit("c", log.version)
     log.bump()  # truncate: version moves, no rows
     assert not log.stream_has_data("c")
+
+
+def test_stream_read_opens_only_its_own_versions(spark, tmp_path):
+    """Reading the newest version of a 40-version log runs as many
+    Spark jobs as reading a 1-version log: the read opens the unread
+    version directories, not the whole log, whose listing past 32
+    directories is a Spark job of its own. A range of truncate bumps
+    alone reads as an empty frame of the same schema."""
+    written = str(tmp_path / "written")
+    dml.write_parquet(_df(spark, [(1, "a"), (2, "b")], "k int, v string").coalesce(1), written)
+
+    def read_newest(name: str, versions: int):
+        log = Changelog(spark, str(tmp_path / name))
+        for _ in range(versions):
+            log.record_linked(written, "INSERT")
+        log.stream_commit("c", versions - 1)
+        return log, *_jobs_of(
+            spark, f"newest_of_{name}", lambda: log.stream_read("c")[0].collect()
+        )
+
+    _, one, one_jobs = read_newest("one", 1)
+    log, forty, forty_jobs = read_newest("forty", 40)
+    assert forty_jobs == one_jobs
+    assert sorted((r.k, r.v, r._version, r._action) for r in forty) == [
+        (1, "a", 40, "INSERT"),
+        (2, "b", 40, "INSERT"),
+    ]
+    assert sorted(tuple(r)[:2] for r in one) == [(1, "a"), (2, "b")]
+
+    schema = log.stream_read("c")[0].schema
+    log.stream_commit("c", 40)
+    log.bump()
+    log.bump()
+    bumped, version = log.stream_read("c")
+    assert version == 42
+    assert bumped.schema == schema
+    assert bumped.count() == 0
+
+
+def test_stream_read_of_a_managed_table_runs_no_spark_job(spark, tmp_path):
+    """A stream read passes Spark the schema the version's writer
+    stored in its footers, so it runs no Spark job (no schema
+    inference) before an action, and reads the same frame as the
+    table: the table's columns, then ``_version`` and ``_action``."""
+    from end_to_end_etl_using_snowflake_spark.plans.catalog import ManagedTable
+
+    schema = "k long, v string, d date"
+    tbl = ManagedTable(spark, str(tmp_path / "t"), T.StructType.fromDDL(schema))
+    tbl.overwrite(spark.sql("SELECT id AS k, 'x' AS v, DATE'2021-03-07' AS d FROM range(3)"))
+    (batch, version), jobs = _jobs_of(
+        spark, "stream_read_no_job", lambda: tbl.changelog.stream_read("c")
+    )
+    assert jobs == 0
+    assert version == 1
+    assert batch.columns == ["k", "v", "d", "_version", "_action"]
+    assert batch.schema["_version"].dataType == T.IntegerType()
+    assert sorted(r.k for r in batch.collect()) == [0, 1, 2]
+
+
+def test_identity_bounds_are_unknown_past_their_limit_or_count(spark, tmp_path):
+    """The row bounds that size an identity rank come from footers and
+    the changelog meta. ``ManagedTable.stored_rows`` is None once the
+    footer rows pass its limit, and ``Changelog.stream_rows`` is None
+    when a version it covers has no recorded row count (a meta written
+    before counts were recorded). Either None keeps the bucketed rank."""
+    from end_to_end_etl_using_snowflake_spark.plans.catalog import ManagedTable
+
+    tbl = ManagedTable(spark, str(tmp_path / "t"), T.StructType.fromDDL("k long, v string"))
+    tbl.overwrite(spark.sql("SELECT id AS k, 'x' AS v FROM range(3)"))
+    assert tbl.stored_rows(None, 3) == 3
+    assert tbl.stored_rows(None, 2) is None
+
+    log = tbl.changelog
+    assert log.stream_rows("c", 1) == 3
+    meta = log._read_meta()
+    del meta["rows"]
+    log._write_meta(meta)
+    bound = log.stream_rows("c", 1)
+    assert bound is None
+
+    plan, _ = _windows(M.fill_identity(tbl.read(), "k", order_by=["v"], max_rows=bound))
+    assert "__bkt" in plan, plan
 
 
 @pytest.mark.parametrize("producer", ["record", "record_linked"])
