@@ -27,7 +27,9 @@ months a batch touches.
 
 from __future__ import annotations
 
+import itertools
 import os
+import time
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
@@ -423,39 +425,20 @@ class EntityPipelines:
         out["order"] = order
         return out
 
-    def run_streaming(
-        self,
-        entity: str,
-        checkpoint_dir: str,
-        processing_time: str | None = None,
-    ):
-        """Continuous mode (T3): one Structured Streaming query per
-        entity whose micro-batch IS the reference's 5-task cycle.
-
-        The root task's ``schedule = '1 minute'`` (customer-...sql:64)
-        maps to ``processing_time="60 seconds"``; ``None`` = drain the
-        backlog with ``availableNow`` and stop (the test/batch mode).
-        The pause->merge->truncate->resume discipline (T5) needs no
-        actual pausing here: a micro-batch is stable by construction,
-        so the task chain runs inside ``foreachBatch`` after the stage
-        append, and the WHEN gates (stream-has-data) still apply.
-        Exactly-once per file across restarts comes from the stream
-        checkpoint; the merge bodies are idempotent (T1), so a crash
-        between stage append and offset commit replays safely.
-
-        Each query runs one entity's chain alone, so nothing orders the
-        fact task after the dims (order-...sql:204-207): a fact batch
-        joins whatever dim state has landed. Run the customer and item
-        queries to completion before the order query, or use
-        ``run_all``, which waits for both dim cycles before the fact.
-        """
-        dag = self.dags[entity]
-        return self.pipes[entity].start_stream(
-            checkpoint_dir,
-            available_now=processing_time is None,
-            processing_time=processing_time,
-            on_batch=dag.run_cycle,
-        )
+    def run_forever(
+        self, interval_seconds: float = 60.0, max_wakeups: int | None = None
+    ) -> None:
+        """The root tasks' ``schedule = '1 minute'`` (customer-...sql:64):
+        ``run_all`` every ``interval_seconds``, start to start, so the
+        fact runs after both dims on every wake-up. Stops after
+        ``max_wakeups`` wake-ups (never when None); a wake-up that
+        outlasts the interval starts the next one at once."""
+        for wakeup in itertools.count(1):
+            start = time.monotonic()
+            self.run_all()
+            if wakeup == max_wakeups:
+                return
+            time.sleep(max(0.0, start + interval_seconds - time.monotonic()))
 
     def layer_tables(self) -> dict[str, DataFrame]:
         """P1 layer-inspection surface (customer-...sql:212-216)."""

@@ -26,6 +26,7 @@ data (wall-clock timestamps aggregated away).
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 from datetime import datetime, timezone
@@ -78,6 +79,13 @@ def assert_fixture_fingerprints(base_dir: str = _REFERENCE_DATA) -> None:
             "replay oracles were hand-derived from the original fixture "
             "bytes and must be re-derived:\n  " + "\n  ".join(drifted)
         )
+
+
+def _read_reference(spark: SparkSession, fname: str, schema) -> DataFrame:
+    """One reference fixture file, read as the pipe's COPY reads it."""
+    from ..sources.copy_into import read_stage_files
+
+    return read_stage_files(spark, [os.path.join(_REFERENCE_DATA, fname)], schema)
 
 
 def _replayed(spark: SparkSession):
@@ -835,19 +843,10 @@ def _sql18_merge_step(prev: str, batch: str) -> str:
 )
 def sql18_reference_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sqldialect import merge_statement
-    from ..sources.csv_format import CSV_OPTIONS, CUSTOMER_STAGE
+    from ..sources.csv_format import CUSTOMER_STAGE
 
     assert_fixture_fingerprints()
-
-    from ..sources.copy_into import _starts_blank
-
-    def read(fname: str) -> DataFrame:
-        path = os.path.join(_REFERENCE_DATA, fname)
-        # the stage reader's skip_header=1 fidelity dispatch
-        # (sources/copy_into.py): Spark drops blank lines BEFORE header
-        # handling, so a blank-first-line file reads header=false
-        opts = dict(CSV_OPTIONS, header=str(not _starts_blank(path)).lower())
-        return spark.read.options(**opts).schema(CUSTOMER_STAGE).csv(path)
+    read = functools.partial(_read_reference, spark, schema=CUSTOMER_STAGE)
 
     state = read("customer_history.csv")
     for delta in ("customer_delta_1.csv", "customer_delta_2.csv"):
@@ -941,15 +940,10 @@ def sql19_reference_dim_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sqldialect import merge_statement
     from ..operators.dml import empty_frame
     from ..operators.merge import fill_identity
-    from ..sources.copy_into import _starts_blank
-    from ..sources.csv_format import CSV_OPTIONS, CUSTOMER_STAGE, DIM_CUSTOMER
+    from ..sources.csv_format import CUSTOMER_STAGE, DIM_CUSTOMER
 
     assert_fixture_fingerprints()
-
-    def read(fname: str) -> DataFrame:
-        path = os.path.join(_REFERENCE_DATA, fname)
-        opts = dict(CSV_OPTIONS, header=str(not _starts_blank(path)).lower())
-        return spark.read.options(**opts).schema(CUSTOMER_STAGE).csv(path)
+    read = functools.partial(_read_reference, spark, schema=CUSTOMER_STAGE)
 
     state = empty_frame(spark, DIM_CUSTOMER)
     steps = [
@@ -1081,15 +1075,10 @@ def _sql20_merge_step(prev: str, batch: str) -> str:
 )
 def sql20_reference_item_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sqldialect import merge_statement
-    from ..sources.copy_into import _starts_blank
-    from ..sources.csv_format import CSV_OPTIONS, ITEM_STAGE
+    from ..sources.csv_format import ITEM_STAGE
 
     assert_fixture_fingerprints()
-
-    def read(fname: str) -> DataFrame:
-        path = os.path.join(_REFERENCE_DATA, fname)
-        opts = dict(CSV_OPTIONS, header=str(not _starts_blank(path)).lower())
-        return spark.read.options(**opts).schema(ITEM_STAGE).csv(path)
+    read = functools.partial(_read_reference, spark, schema=ITEM_STAGE)
 
     state = read("item_history.csv")
     for delta in ("item_delta_1.csv", "item_delta_2.csv"):
@@ -1364,15 +1353,10 @@ def _sql22_merge_step(prev: str, batch: str) -> str:
 )
 def sql22_reference_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sqldialect import merge_statement
-    from ..sources.copy_into import _starts_blank
-    from ..sources.csv_format import CSV_OPTIONS, ORDER_STAGE
+    from ..sources.csv_format import ORDER_STAGE
 
     assert_fixture_fingerprints()
-
-    def read(fname: str) -> DataFrame:
-        path = os.path.join(_REFERENCE_DATA, fname)
-        opts = dict(CSV_OPTIONS, header=str(not _starts_blank(path)).lower())
-        return spark.read.options(**opts).schema(ORDER_STAGE).csv(path)
+    read = functools.partial(_read_reference, spark, schema=ORDER_STAGE)
 
     state = read("order_history.csv")
     out = merge_statement(

@@ -4,8 +4,11 @@ directory ("external stage") into a stage table.
 Snowflake's COPY (the pipe body, reference customer-...sql:54-56) loads
 each file exactly once via its load-history manifest. Batch analog: diff
 the directory listing against a manifest of already-loaded files, read
-only the new ones, append. (The Structured Streaming path in
-sources.pipe gets the same guarantee from its checkpoint.)
+only the new ones, append.
+
+Every surface that reads stage files (``copy_into``, ``copy_statement``,
+``stage_select`` and the verbatim-MERGE replays) reads them through
+``read_stage_files``, the one owner of the ``SKIP_HEADER = 1`` rule.
 
 Scale: the manifest keys on file *names* (object-store listing), never
 file contents; the read is one ``spark.read.csv`` over just the new
@@ -14,14 +17,16 @@ files, so load cost tracks the delta, not the stage history.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .csv_format import CSV_OPTIONS
+from .file_format import CSV_FORMAT, FileFormat
 
 
 def list_stage(landing_dir: str) -> list[str]:
@@ -53,15 +58,50 @@ class CopyManifest:
 
 
 def _starts_blank(path: str) -> bool:
-    """True when the file's first physical line is empty. Snowflake's
-    ``skip_header=1`` skips exactly one physical line; Spark's CSV
-    reader drops blank lines BEFORE header handling, so a blank-first-
-    line file (customer_delta_1.csv) would lose a data row to header
-    skipping. Peeking 2 bytes per new file is O(files) driver work —
-    same cost class as the directory listing itself."""
+    """True when the file's first physical line is empty. Peeking 2
+    bytes per file is O(files) driver work, the same cost class as the
+    directory listing itself."""
     with open(path, "rb") as f:
         head = f.read(2)
     return head[:1] in (b"\n", b"\r")
+
+
+def read_stage_files(
+    spark: SparkSession,
+    paths: Sequence[str],
+    schema: T.StructType,
+    fmt=None,
+    per_read: Callable[[DataFrame, bool], DataFrame] | None = None,
+) -> DataFrame:
+    """Read stage files as one frame, skipping the header the way
+    Snowflake's ``SKIP_HEADER = 1`` does: exactly one physical line per
+    file, whatever it holds.
+
+    ``fmt`` is a named format (sources.file_format), the reference's CSV
+    format by default. Spark's CSV reader drops blank lines BEFORE
+    header handling, so under ``header`` "true" a file whose first line
+    is blank (customer_delta_1.csv) would lose its first data row to the
+    header skip. Those files are read with header=false: the reader
+    drops the blank line itself, and one line is skipped either way.
+
+    ``per_read(df, header_skipped)`` maps each read's frame before the
+    union (``stage_select`` numbers rows per read with it)."""
+    fmt = fmt or CSV_FORMAT
+    per_read = per_read or (lambda df, _: df)
+    skips = fmt.options.get("header") == "true"
+    reads = [(fmt, list(paths), skips)]
+    if fmt.fmt == "csv" and skips:
+        blank = {p for p in paths if _starts_blank(p)}
+        reads = [
+            (fmt, [p for p in paths if p not in blank], True),
+            (FileFormat("csv", dict(fmt.options, header="false")),
+             [p for p in paths if p in blank], False),
+        ]
+    return functools.reduce(DataFrame.unionByName, [
+        per_read(f.read(spark, ps, schema), skipped)
+        for f, ps, skipped in reads
+        if ps
+    ])
 
 
 def copy_into(
@@ -77,34 +117,12 @@ def copy_into(
     silently skipping.
 
     ``file_format`` is a named format (sources.file_format); default is
-    the reference's CSV format. skip_header=1 fidelity (CSV only):
-    normal files read with header=true (skip 1 line, unvalidated);
-    blank-first-line files read with header=false — the CSV reader
-    drops the blank line itself, so exactly one physical line is
-    skipped either way, matching Snowflake.
-    """
-    from .file_format import CSV_FORMAT, FileFormat
-
-    fmt = file_format or CSV_FORMAT
+    the reference's CSV format."""
     new_files = set(list_stage(landing_dir)) - manifest.loaded()
     if not new_files:
         return None, set()
     paths = [os.path.join(landing_dir, f) for f in sorted(new_files)]
-    if fmt.fmt != "csv":
-        return fmt.read(spark, paths, schema), new_files
-    with_header = [p for p in paths if not _starts_blank(p)]
-    headerless = [p for p in paths if _starts_blank(p)]
-    parts = []
-    if with_header:
-        parts.append(fmt.read(spark, with_header, schema))
-    if headerless:
-        headerless_fmt = FileFormat("csv", dict(fmt.options, header="false"))
-        parts.append(headerless_fmt.read(spark, headerless, schema))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df, new_files
-
+    return read_stage_files(spark, paths, schema, file_format), new_files
 
 
 def stage_select(
@@ -112,11 +130,10 @@ def stage_select(
 ) -> DataFrame:
     """Snowflake's query-the-stage-directly idiom (r8): ``SELECT ...
     METADATA$FILENAME ... FROM @<stage>[/prefix] ...`` verbatim. The
-    stage files are read with the same named-format quirks as COPY
-    INTO (skip_header=1 fidelity incl. the blank-first-line split —
-    S2's exact read path), each row stamped with its source file's
-    basename as ``METADATA$FILENAME``, and the statement runs over
-    the registered relation.
+    stage files are read as COPY INTO reads them (``read_stage_files``,
+    the named format's skip_header=1 rule), each row stamped with its
+    source file's basename as ``METADATA$FILENAME``, and the statement
+    runs over the registered relation.
 
     ``METADATA$FILE_ROW_NUMBER`` (r12 — closes the r11 refusal) is
     the PHYSICAL record number inside the source file, header line
@@ -145,8 +162,6 @@ def stage_select(
 
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-
-    from .file_format import CSV_FORMAT, FileFormat
 
     want_rownum = bool(
         re.search(r"METADATA\$FILE_ROW_NUMBER", text, re.IGNORECASE)
@@ -183,7 +198,7 @@ def stage_select(
             )
     fname = F.regexp_extract(F.input_file_name(), r"([^/]+)$", 1)
 
-    def _with_meta(df: DataFrame, header_consumed: bool) -> DataFrame:
+    def _with_meta(df: DataFrame, header_skipped: bool) -> DataFrame:
         # nondeterministic leaf expressions (input_file_name, the scan
         # sequence id) must be MATERIALIZED in a Project before a
         # window may key/order on them — and materializing pins their
@@ -199,25 +214,11 @@ def stage_select(
             df = df.withColumn(
                 "METADATA$FILE_ROW_NUMBER",
                 F.row_number().over(w)
-                + F.lit(1 if header_consumed else 0),
+                + F.lit(1 if header_skipped else 0),
             ).drop("__seq", "__path")
         return df
 
-    parts = []
-    with_header = [p for p in paths if not _starts_blank(p)]
-    headerless = [p for p in paths if _starts_blank(p)]
-    if with_header:
-        parts.append(
-            _with_meta(CSV_FORMAT.read(spark, with_header, schema), True)
-        )
-    if headerless:
-        headerless_fmt = FileFormat("csv", dict(CSV_FORMAT.options, header="false"))
-        parts.append(
-            _with_meta(headerless_fmt.read(spark, headerless, schema), False)
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    df = read_stage_files(spark, paths, schema, per_read=_with_meta)
     view = f"__stage_{prefix or 'all'}"
     df.createOrReplaceTempView(view)
     clean = text[: m.start()] + f"FROM {view}" + text[m.end():]
@@ -606,10 +607,8 @@ def translate_csv_format_options(fmt: dict[str, str]) -> dict[str, str]:
                     " cannot distinguish empty from NULL per-field"
                 )
         elif k == "error_on_column_count_mismatch":
-            # both values run under PERMISSIVE + corrupt-record capture:
-            # the statement's ON_ERROR clause (not the format) decides
-            # whether a short/long row rejects the load, which is the
-            # COPY-statement semantic in both systems.
+            # no reader option: copy_statement decides which of the
+            # records the reader flags it rejects
             if v.lower() not in ("true", "false"):
                 raise ValueError(
                     f"ERROR_ON_COLUMN_COUNT_MISMATCH = {v!r}: boolean"
@@ -763,15 +762,20 @@ def copy_statement(
       rejected record fails the whole statement and nothing is
       appended. ``CONTINUE``: good rows load, bad rows count into
       errors_seen and the file reports PARTIALLY_LOADED.
+    - a record whose field count differs from the table's loads, as
+      the pipe loads it (missing trailing columns NULL, extra fields
+      dropped), under the named format's
+      ``ERROR_ON_COLUMN_COUNT_MISMATCH = FALSE``; ``= TRUE`` rejects
+      it. A field that fails its cast rejects the record either way.
 
-    Scale: listing is O(files) driver metadata; the read is ONE
-    spark.read.csv over the matched files with PERMISSIVE corrupt-
+    Scale: listing is O(files) driver metadata; the read is
+    ``read_stage_files`` over the matched files (one spark.read.csv,
+    two when some start with a blank line) with PERMISSIVE corrupt-
     record capture — per-file stats come from a groupBy on the scan's
-    own input_file_name, no extra pass over the data.
+    own input_file_name, no extra pass over the data; only flagged
+    records are re-split.
     """
     from pyspark.sql import functions as F
-
-    from .file_format import CSV_FORMAT, FileFormat
 
     spec = parse_copy_statement(text)
     if spec["table"] not in tables:
@@ -818,7 +822,7 @@ def copy_statement(
         + [T.StructField("__rejected", T.StringType())]
     )
     paths = [os.path.join(root, n) for n in names]
-    raw = fmt.read(spark, paths, schema).withColumn(
+    raw = read_stage_files(spark, paths, schema, fmt).withColumn(
         "__file", F.input_file_name()
     )
     # input_file_name() is a URL-encoded URI (spaces -> %20): decode it
@@ -836,14 +840,36 @@ def copy_statement(
             r"^.*?" + _re2.escape(os.path.basename(root)) + "/", "",
         ),
     )
+    # the reader flags a record whose field count differs from the
+    # schema's, and one with a field that fails its cast; the typed
+    # parse leaves the failed field NULL, so a flagged record had a
+    # cast failure iff re-splitting it as strings finds a value there
+    rejected = F.col("__rejected").isNotNull()
+    # FALSE is the named format's value
+    if spec["format_options"].get(
+        "error_on_column_count_mismatch", "false"
+    ).lower() == "false":
+        typed = [f for f in target.schema.fields
+                 if not isinstance(f.dataType, T.StringType)]
+        tokens = F.from_csv(
+            "__rejected",
+            ", ".join(f"`{f.name}` string" for f in target.schema.fields),
+            fmt.options,
+        )
+        rejected = rejected & functools.reduce(
+            lambda a, b: a | b,
+            [tokens[f.name].isNotNull() & F.col(f.name).isNull()
+             for f in typed],
+            F.lit(False),
+        )
     # Spark refuses corrupt-record-ONLY projections on a raw CSV scan
     # (QUERY_ONLY_CORRUPT_RECORD_COLUMN); its documented remedy is to
     # cache the parsed batch first. A COPY statement's batch is the
     # right cache granularity — it is the statement's own input, never
     # the table — and both the stats aggregate and the appended rows
     # reuse the single cached parse instead of re-scanning the files.
-    raw = raw.cache()
-    bad = raw.filter(F.col("__rejected").isNotNull())
+    raw = raw.withColumn("__reject", rejected).cache()
+    bad = raw.filter("__reject")
     if spec["validate_only"]:
         return bad.select(
             F.lit("parse error: record does not conform to the table"
@@ -855,11 +881,12 @@ def copy_statement(
         raw.groupBy(F.col("__file").alias("file"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("rows_parsed"),
-            F.sum(F.when(F.col("__rejected").isNull(), 1).otherwise(0))
+            F.sum(F.when(F.col("__reject"), 0).otherwise(1))
             .cast("long").alias("rows_loaded"),
-            F.sum(F.when(F.col("__rejected").isNotNull(), 1).otherwise(0))
+            F.sum(F.when(F.col("__reject"), 1).otherwise(0))
             .cast("long").alias("errors_seen"),
-            F.min("__rejected").alias("first_error_record"),
+            F.min(F.when(F.col("__reject"), F.col("__rejected")))
+            .alias("first_error_record"),
         )
         .select(
             "file",
@@ -882,7 +909,7 @@ def copy_statement(
                 f"COPY aborted (ON_ERROR = ABORT_STATEMENT): rejected"
                 f" record in {first['__file']}: {first['__rejected']!r}"
             )
-    good = raw.filter(F.col("__rejected").isNull()).select(
+    good = raw.filter(~F.col("__reject")).select(
         *[f.name for f in target.schema.fields]
     )
     tables[spec["table"]] = target.unionByName(good)

@@ -13,8 +13,11 @@ Spark translation notes (verified against the reference fixtures):
 - ``skip_header=1`` skips one physical line per file regardless of
   content. Spark equivalent: ``header=True`` + explicit schema +
   ``enforceSchema=True`` (default) — the first line is skipped
-  *unvalidated*, which also absorbs customer_delta_1.csv's blank first
-  line and customer_delta_2.csv's 9-column header.
+  *unvalidated*, which absorbs customer_delta_2.csv's 9-column header.
+  It does not cover customer_delta_1.csv's blank first line: Spark
+  drops blank lines before header handling, so ``header=True`` alone
+  would skip that file's first data row. ``copy_into.read_stage_files``
+  reads such files with ``header=false``; read stage files through it.
 - ``error_on_column_count_mismatch=false`` -> PERMISSIVE mode; short
   rows (customer_delta_1.csv carries 9 of 10 columns — no is_active)
   fill missing trailing columns with NULL.

@@ -4,10 +4,10 @@ The reference defines exactly one (type=CSV, README.md:38-45; see
 ``csv_format`` for the translation), but Snowflake file formats are
 named, reusable parse specs covering JSON/Parquet/Avro too — this
 module is that abstraction for the engine's ingest layer: a format
-object any stage/pipe can reference by value, batch or streaming.
+object any stage/pipe can reference by value.
 
 Scale note: format choice is a per-file-reader concern; exactly-once
-ingest (manifest / stream checkpoint) and the stage-table contract are
+ingest (the load manifest) and the stage-table contract are
 format-agnostic, so COPY INTO and pipes take a format parameter rather
 than hard-coding CSV.
 """
@@ -40,17 +40,6 @@ class FileFormat:
         if schema is not None:
             reader = reader.schema(schema)
         return reader.load(list(paths))
-
-    def read_stream(
-        self, spark: SparkSession, path: str, schema: T.StructType
-    ) -> DataFrame:
-        # streaming file sources require an explicit schema
-        return (
-            spark.readStream.format(self.fmt)
-            .options(**self.options)
-            .schema(schema)
-            .load(path)
-        )
 
 
 # the reference's named CSV format (README.md:38-45)

@@ -5,27 +5,19 @@ stage table; pausable (``pipe_execution_paused``, customer-...sql:68),
 resumable (``system$pipe_force_resume``, customer-...sql:179), with
 ``system$pipe_status`` (customer-...sql:209).
 
-Two modes, same semantics:
-
-- batch (default): ``refresh()`` polls the directory and runs the
-  manifest-diff COPY — used by the task cycle, where pause/resume
-  brackets make the batch stable (T5).
-- streaming: a Structured Streaming file source with checkpoint;
-  ``Trigger.AvailableNow`` for drain-the-backlog, processingTime for
-  continuous. Exactly-once per file comes from the checkpoint instead
-  of the manifest. (OSS file source polls; SQS-push is a cloud-trigger
-  optimization with identical semantics.)
+``refresh()`` polls the directory and runs the manifest-diff COPY
+(``copy_into``); the task cycle's pause/resume brackets make the batch
+stable (T5), and ``EntityPipelines.run_forever`` is the schedule that
+calls it.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from ..plans.catalog import ManagedTable
-from .copy_into import CopyManifest, copy_into
+from .copy_into import CopyManifest, copy_into, list_stage
 
 
 class Pipe:
@@ -49,7 +41,6 @@ class Pipe:
         self.paused = False
         self.manifest = CopyManifest(f"{stage_table.path}.__copy_manifest.json")
 
-    # -- batch mode --------------------------------------------------------
     def refresh(self) -> int:
         """Poll landing dir; load new files into the stage table.
         Returns number of files loaded (0 while paused)."""
@@ -83,46 +74,9 @@ class Pipe:
         return {
             "name": self.name,
             "executionState": "PAUSED" if self.paused else "RUNNING",
+            # the listing COPY loads from: no dotfiles (an upload in
+            # flight), no subdirectories
             "pendingFileCount": len(
-                set(os.listdir(self.landing_dir)) - self.manifest.loaded()
-            )
-            if os.path.isdir(self.landing_dir)
-            else 0,
+                set(list_stage(self.landing_dir)) - self.manifest.loaded()
+            ),
         }
-
-    # -- streaming mode ----------------------------------------------------
-    def start_stream(
-        self,
-        checkpoint_dir: str,
-        available_now: bool = True,
-        processing_time: str | None = None,
-        on_batch=None,
-    ):
-        """Structured Streaming variant: file source -> foreachBatch
-        append to the stage table. Checkpoint gives exactly-once per
-        file across restarts (the pipe's COPY guarantee).
-
-        ``processing_time`` (e.g. ``"60 seconds"``) is the continuous
-        analog of the reference root task's ``schedule = '1 minute'``
-        (customer-...sql:64); ``on_batch`` runs after each stage append
-        — the hook the pipeline uses to run its task chain per
-        micro-batch (T5: the batch is stable by construction, so the
-        pause/resume bracket is the micro-batch boundary itself).
-        """
-        reader = self.file_format.read_stream(
-            self.spark, self.landing_dir, self.schema
-        )
-
-        def sink(batch_df, batch_id: int) -> None:
-            self.stage_table.append(batch_df, action="INSERT")
-            if on_batch is not None:
-                on_batch()
-
-        writer = reader.writeStream.foreachBatch(sink).option(
-            "checkpointLocation", checkpoint_dir
-        )
-        if processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        elif available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

@@ -13,16 +13,16 @@ Semantics implemented:
   behavior for a skipped root).
 - A task exception, raised by its body or its WHEN, records FAILED
   and stops the chain.
-- ``run_cycle`` executes one scheduled wake-up; ``run_forever`` loops
-  with the schedule interval (the '1 minute' mode). In Spark the cycle
-  is driver-side choreography only — every body is a DataFrame job, so
-  compute still scales out; at 100 TB you point the same DAG at a real
-  scheduler (Airflow etc.) without touching task bodies.
+- ``run_cycle`` executes one scheduled wake-up; the schedule itself
+  (the '1 minute' mode) is ``EntityPipelines.run_forever``. In Spark
+  the cycle is driver-side choreography only — every body is a
+  DataFrame job, so compute still scales out; at 100 TB you point the
+  same DAG at a real scheduler (Airflow etc.) without touching task
+  bodies.
 """
 
 from __future__ import annotations
 
-import time
 import traceback
 from collections.abc import Callable, Mapping
 from dataclasses import dataclass
@@ -130,15 +130,6 @@ class TaskDag:
                 traceback.format_exc(limit=3),
             )
         return TaskRun(task.name, "SUCCEEDED", scheduled, datetime.now(timezone.utc))
-
-    def run_forever(self, interval_seconds: float = 60.0, max_cycles: int | None = None) -> None:
-        """schedule='1 minute' mode (customer-...sql:64)."""
-        cycles = 0
-        while max_cycles is None or cycles < max_cycles:
-            self.run_cycle()
-            cycles += 1
-            if max_cycles is None or cycles < max_cycles:
-                time.sleep(interval_seconds)
 
     def task_history(self) -> DataFrame:
         """information_schema.task_history() analog

@@ -459,34 +459,6 @@ def test_record_of_a_stream_batch_takes_the_new_version(spark, tmp_path):
     ]
 
 
-def test_pipe_streaming_mode(spark, tmp_path):
-    """S3 streaming variant: file source + availableNow + checkpoint
-    gives exactly-once per file across restarts."""
-    from end_to_end_etl_using_snowflake_spark.plans.catalog import Warehouse
-    from end_to_end_etl_using_snowflake_spark.sources.csv_format import CUSTOMER_STAGE
-    from end_to_end_etl_using_snowflake_spark.sources.pipe import Pipe
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "f1.csv").write_text("CUSTOMER_ID,SALUTATION\nc1,Mr.\nc2,Dr.\n")
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    stage = wh.table("stg", "stg_customer_stream", CUSTOMER_STAGE)
-    pipe = Pipe(spark, "p", str(landing), stage, CUSTOMER_STAGE)
-
-    q = pipe.start_stream(str(tmp_path / "ckpt"))
-    q.awaitTermination(60)
-    assert stage.read().count() == 2
-    # restart with same checkpoint: no reprocessing
-    q = pipe.start_stream(str(tmp_path / "ckpt"))
-    q.awaitTermination(60)
-    assert stage.read().count() == 2
-    # new file -> only it is processed
-    (landing / "f2.csv").write_text("CUSTOMER_ID,SALUTATION\nc3,Ms.\n")
-    q = pipe.start_stream(str(tmp_path / "ckpt"))
-    q.awaitTermination(60)
-    assert stage.read().count() == 3
-
-
 def test_multimodal_real_decoder_raises(spark):
     docs = _df(spark, [(1, "hello")], "doc_id long, text string")
     payload = MM.to_binary_payload(docs, "doc_id", "text")

@@ -162,44 +162,6 @@ def test_referential_integrity(replayed):
     assert fact.join(di, "item_dim_key", "left_anti").count() == 0
 
 
-def test_streaming_run_cycle_end_to_end(spark, tmp_path):
-    """T3 continuous mode: the micro-batch IS the 5-task cycle.
-
-    Drive the customer pipeline via run_streaming (availableNow drain):
-    history file -> dim populated; restart on the same checkpoint with a
-    delta file -> only the new file is processed (exactly-once) and the
-    insert branch fires.
-    """
-    landing = tmp_path / "landing"
-    for e in ("customer", "item", "order"):
-        (landing / e).mkdir(parents=True)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    clock = {"now": datetime(2021, 5, 1, tzinfo=timezone.utc)}
-    p = EntityPipelines(spark, wh, str(landing), clock=lambda: clock["now"])
-    ckpt = str(tmp_path / "ckpt_customer")
-
-    shutil.copy(SRC / "customer_history.csv", landing / "customer" / "customer_history.csv")
-    q = p.run_streaming("customer", ckpt)
-    q.awaitTermination(120)
-    assert p.dim_customer.read().count() == 20
-
-    clock["now"] = datetime(2021, 5, 2, tzinfo=timezone.utc)
-    shutil.copy(SRC / "customer_delta_2.csv", landing / "customer" / "customer_delta_2.csv")
-    q = p.run_streaming("customer", ckpt)
-    q.awaitTermination(120)
-
-    dim = p.dim_customer.read().collect()
-    assert len(dim) == 21  # history replayed would give duplicates/updates
-    new = [r for r in dim if r.customer_id == "AAAAAAAALKBJCPAA"]
-    assert len(new) == 1 and new[0].first_name == "Antonio"
-    assert new[0].added_timestamp == clock["now"].replace(tzinfo=None)
-    # each drained micro-batch walked the full chain
-    chain = [r.state for r in p.dags["customer"].history]
-    assert chain.count("SUCCEEDED") == 10  # 5 tasks x 2 micro-batches
-    # stage truncated by task 4, ready for the next batch
-    assert p.stage["customer"].read().count() == 0
-
-
 def test_crash_replay_between_write_and_commit(spark, tmp_path):
     """T1's crash window: the dim table write landed but the stream
     offset commit did not. Recovery = re-run the task; the merge is

@@ -397,3 +397,51 @@ def test_warm_wake_up_compiles_nothing(pipeline, compiles):
         assert _all_succeeded(p.run_all())
     assert compiles() - before == 0
     assert len(_fact(p)) == 5
+
+
+def test_run_forever_loads_each_file_once_across_a_restart(spark, tmp_path):
+    """The schedule runs ``run_all`` once per wake-up. A fresh ``EntityPipelines`` on the same warehouse and landing directory
+    loads only the file that landed since: the old customers keep their
+    ``updated_timestamp``, the new one is inserted with the restart's
+    clock stamp, and the chain truncates the stage."""
+    landing = tmp_path / "landing"
+    for e in ("customer", "item", "order"):
+        (landing / e).mkdir(parents=True)
+    _write(landing, "customer", "c0", [_customer(i) for i in range(3)])
+    _write(landing, "item", "i0", [_item(i) for i in range(2)])
+    _write(landing, "order", "o0", [_order(1, 0, 0), _order(1, 1, 1, qty=2)])
+    day1 = datetime(2022, 3, 1, tzinfo=timezone.utc)
+    day2 = datetime(2022, 3, 2, tzinfo=timezone.utc)
+
+    def make(now: datetime) -> EntityPipelines:
+        wh = Warehouse(spark, str(tmp_path / "wh"))
+        return EntityPipelines(spark, wh, str(landing), clock=lambda: now)
+
+    p = make(day1)
+    p.run_forever(0, max_wakeups=2)
+    # wake-up 1 walks every chain; wake-up 2 finds no new file
+    for e in ("customer", "item", "order"):
+        assert [r.state for r in p.dags[e].history] == ["SUCCEEDED"] * 5 + ["SKIPPED"]
+    assert _fact(p) == {("C0", "I0", "2021-03-01"): 1, ("C1", "I1", "2021-03-01"): 2}
+    keys = {r.customer_id: r.customer_dim_key for r in p.dim_customer.read().collect()}
+
+    renamed = list(_customer(1))
+    renamed[2] = "Renamed"
+    _write(landing, "customer", "c1", [tuple(renamed), _customer(3)])
+    p = make(day2)
+    p.run_forever(0, max_wakeups=1)
+    assert [r.state for r in p.dags["customer"].history] == ["SUCCEEDED"] * 5
+    assert [r.state for r in p.dags["item"].history] == ["SKIPPED"]
+    assert [r.state for r in p.dags["order"].history] == ["SKIPPED"]
+    assert p.pipes["customer"].manifest.loaded() == {"c0.csv", "c1.csv"}
+    assert p.stage["customer"].read().count() == 0
+    assert p.raw["customer"].read().count() == 4
+
+    dim = {r.customer_id: r for r in p.dim_customer.read().collect()}
+    naive = lambda d: d.replace(tzinfo=None)  # noqa: E731
+    assert {c: dim[c].customer_dim_key for c in keys} == keys
+    assert [dim[c].updated_timestamp for c in ("C0", "C2")] == [naive(day1)] * 2
+    assert dim["C1"].first_name == "Renamed"
+    assert (dim["C1"].added_timestamp, dim["C1"].updated_timestamp) == (naive(day1), naive(day2))
+    assert dim["C3"].customer_dim_key == max(keys.values()) + 1
+    assert dim["C3"].added_timestamp == dim["C3"].updated_timestamp == naive(day2)
